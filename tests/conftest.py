@@ -17,19 +17,39 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #: properties — are SKIPPED by default and run when
 #: SPARK_GRAFT_FULL_TESTS=1 is set (CI / release gate). The default
 #: tier keeps every operator's functional, referee, and plan-shape
-#: coverage and finishes in ~10 minutes.
+#: coverage and finishes in ~10 minutes. A slow test named by node id on
+#: the command line (`pytest tests/x.py::test_y`) always runs.
 RUN_SLOW = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") not in ("", "0")
+
+
+def _named_node_ids(config) -> set[str]:
+    """Node ids given on the command line, relative to the rootdir as
+    item.nodeid is."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        full = (config.invocation_params.dir / path).resolve()
+        try:
+            rel = full.relative_to(config.rootpath)
+        except ValueError:
+            continue
+        named.add(f"{rel.as_posix()}::{rest}")
+    return named
 
 
 def pytest_collection_modifyitems(config, items):
     if RUN_SLOW or config.getoption("-m", default=""):
         # an explicit -m expression (e.g. `-m slow`) takes over selection
         return
+    named = _named_node_ids(config)
     skip = pytest.mark.skip(
         reason="slow tier: set SPARK_GRAFT_FULL_TESTS=1 to run"
     )
     for item in items:
-        if "slow" in item.keywords:
+        explicit = item.nodeid in named or item.nodeid.split("[")[0] in named
+        if "slow" in item.keywords and not explicit:
             item.add_marker(skip)
 
 

@@ -5,6 +5,8 @@ identical every call on immutable inputs). The memo must be a plan, not
 results: executions still scan parquet, hits return the same DataFrame,
 and a new session must not serve plans bound to the old one."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from transitlog_hfp_sink_spark.sources.files import _READ_CACHE, read_table
@@ -65,11 +67,11 @@ def test_synth_vehicles_widen_is_result_invariant(spark, sf_dir):
     assert digest(plain) == digest(wide)
 
 
-def test_embeddings_vec_id_unique(spark):
+def test_embeddings_vec_id_unique(spark, sf_dir):
     """ADVICE r11: _fixed_codebook's narrow-vs-widened collect identity
     rests on vec_id being unique (orderBy('vec_id') must be a total
     order). Pin the invariant on every test SF."""
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-               "/root/testdata/sf0.1"):
+    root = os.path.dirname(sf_dir)
+    for sf in (os.path.join(root, n) for n in ("sf0.001", "sf0.01", "sf0.1")):
         emb = spark.read.parquet(sf + "/embeddings.parquet")
         assert emb.count() == emb.select("vec_id").distinct().count(), sf

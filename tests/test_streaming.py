@@ -226,9 +226,14 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert got.get("2024-01-01 10:00:00") == 2
 
 
-def test_rate_logging_listener_captures_progress(spark, tmp_path, drops_dir):
-    """M6 parity: the listener must record per-batch input rows/rates."""
-    from transitlog_hfp_sink_spark.streaming import RateLoggingListener
+def test_rate_logging_listener_captures_progress(
+    spark, tmp_path, drops_dir, monkeypatch
+):
+    """M6 parity: the listener must record per-batch input rows/rates,
+    and its history stays at a fixed cap however many batches run."""
+    from types import SimpleNamespace
+
+    from transitlog_hfp_sink_spark.streaming import RateLoggingListener, pipeline
 
     listener = RateLoggingListener()
     spark.streams.addListener(listener)
@@ -248,6 +253,95 @@ def test_rate_logging_listener_captures_progress(spark, tmp_path, drops_dir):
         assert all("batchId" in p for p in listener.progress)
     finally:
         spark.streams.removeListener(listener)
+
+    monkeypatch.setattr(pipeline, "PROGRESS_HISTORY", 3)
+    capped = RateLoggingListener()
+    for bid in range(10):
+        capped.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+            batchId=bid, numInputRows=1, inputRowsPerSecond=1.0,
+            processedRowsPerSecond=1.0,
+        )))
+    assert [p["batchId"] for p in capped.progress] == [7, 8, 9]
+
+
+def test_connector_stream_frames_are_decoded(spark, tmp_path):
+    """read_hfp_stream's connector branch (pulsar/kafka) must hand
+    HfpPipeline decoded HFP rows, not raw connector frames. The connector
+    jars are not on the classpath, so a test-only stream source registered
+    as format "pulsar" stands in: it emits Pulsar-shaped frames whose
+    binary value column carries Hfp.Data wire bytes, one per fixture row
+    (undecodable bytes for the invalid-schema rows)."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    from transitlog_hfp_sink_spark.app import make_sink
+    from transitlog_hfp_sink_spark.sources.protowire import (
+        INVALID_WIRE_BYTES,
+        encode_data,
+    )
+    from transitlog_hfp_sink_spark.transform import hfp_split
+
+    rows = make_hfp_rows()
+    frames = [
+        encode_data(dict(r["topic"]), dict(r["payload"]))
+        if r["schema_valid"] else INVALID_WIRE_BYTES
+        for r in rows
+    ]
+
+    class FakePulsarReader(SimpleDataSourceStreamReader):
+        def __init__(self, options):
+            assert options.get("topic") == "hfp-data", options
+
+        def initialOffset(self):  # noqa: N802
+            return {"entry": 0}
+
+        def _frames(self, lo, hi):
+            return iter([
+                (frames[i], b"key", "hfp-data", i.to_bytes(8, "big"))
+                for i in range(lo, hi)
+            ])
+
+        def read(self, start):
+            return self._frames(start["entry"], len(frames)), {"entry": len(frames)}
+
+        def readBetweenOffsets(self, start, end):  # noqa: N802
+            return self._frames(start["entry"], end["entry"])
+
+    class FakePulsar(DataSource):
+        @classmethod
+        def name(cls):
+            return "pulsar"
+
+        def schema(self):
+            return "value binary, __key binary, __topic string, __messageId binary"
+
+        def simpleStreamReader(self, schema):  # noqa: N802
+            return FakePulsarReader(self.options)
+
+    try:
+        spark.dataSource.register(FakePulsar)
+    except AnalysisException as e:
+        if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
+            raise
+        pytest.skip("a real pulsar connector is on the classpath")
+    want_valid, want_dead = (
+        df.count()
+        for df in hfp_split(spark.createDataFrame(rows, schema=HFP_RAW_SCHEMA))
+    )
+    assert want_valid > 0 and want_dead > 0
+
+    sink, dead = str(tmp_path / "sink"), str(tmp_path / "dead")
+    pipe = HfpPipeline(
+        sink=make_sink(f"parquet:{sink}"), checkpoint=str(tmp_path / "ckpt"),
+        trigger_seconds=0.3, dead_letter_path=dead,
+    )
+    q = pipe.start(read_hfp_stream(spark, "hfp-data", fmt="pulsar"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.read.parquet(sink).count() == want_valid
+    assert spark.read.parquet(dead).count() == want_dead
 
 
 def test_cross_batch_dedup_within_watermark(spark, tmp_path):

@@ -347,93 +347,100 @@ def test_streaming_soak_sustained_rate_kill_recovery_under_contention(
     assert median >= 250_000, f"sustained {median:,.0f} rows/s < 250k"
 
 
+def _wire_message(template: dict, seq: int) -> bytes:
+    """One valid ``Hfp.Data`` message with a natural key unique per seq
+    (unique tst per sequence number)."""
+    from datetime import timedelta
+
+    from hfp_fixtures import BASE
+
+    from transitlog_hfp_sink_spark.sources.protowire import encode_data
+
+    topic = dict(template["topic"])
+    payload = dict(template["payload"])
+    ts = BASE + timedelta(seconds=seq)
+    topic["unique_vehicle_id"] = f"{seq % 7:04d}/{seq % 40:05d}"
+    payload["tst"] = ts.strftime("%Y-%m-%dT%H:%M:%S.000")
+    payload["tsi"] = int(ts.timestamp())
+    return encode_data(topic, payload)
+
+
+def _write_wire_file(path: str, messages: list[bytes]) -> None:
+    """One ``value binary`` parquet file, written under a hidden name and
+    then renamed, so the file source never lists a half-written file."""
+    import os as _os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d, base = _os.path.split(path)
+    tmp = _os.path.join(d, f".{base}.tmp")
+    pq.write_table(pa.table({"value": pa.array(messages, pa.binary())}), tmp)
+    _os.replace(tmp, path)
+
+
+def _start_wire_pipeline(spark, src: str, sink: str, dead: str, ckpt: str):
+    """The product ingest path: wire files -> decode_hfp_wire ->
+    HfpPipeline -> the app's parquet sink, with a dead-letter path."""
+    from transitlog_hfp_sink_spark.app import make_sink
+    from transitlog_hfp_sink_spark.sources.protowire import decode_hfp_wire
+    from transitlog_hfp_sink_spark.streaming.pipeline import HfpPipeline
+
+    pipe = HfpPipeline(
+        sink=make_sink(f"parquet:{sink}"), checkpoint=ckpt, dead_letter_path=dead
+    )
+    return pipe.start(
+        decode_hfp_wire(spark.readStream.schema("value binary").parquet(src))
+    )
+
+
 @pytest.mark.slow
-def test_hfp_datasource_soak_kill_recovery_zero_loss(spark, tmp_path):
+def test_wire_stream_soak_kill_recovery_zero_loss(spark, tmp_path):
     """Round-7 soak (VERDICT r6 #7): the round-6 soak drives the
     parquet-append pipeline through the RATE source; this variant runs
-    the same kill/recover profile through the actual wire-format path —
-    sources/hfp_datasource.py's directory-tailing format='hfp' stream —
-    while a producer thread keeps rolling capture files (atomic rename,
-    monotone names, the documented contract). One mid-run kill, recovery
-    from the same checkpoint, then:
+    the same kill/recover profile through the actual wire ingest path —
+    a file stream of ``value binary`` wire files decoded by
+    decode_hfp_wire into HfpPipeline and the app's parquet sink — while
+    a producer thread keeps rolling capture files (atomic rename). One
+    mid-run kill, recovery from the same checkpoint, then:
 
     - zero row LOSS: every produced message carries a unique natural key
       (unique tst per sequence number), so the dedup view over the sink
       must hold EXACTLY n_messages rows however the kill straddled
       batches;
     - at-least-once, not exactly-once: written rows >= n_messages (the
-      killed batch's files are replayed from the filename-watermark
-      offset);
+      killed batch's files are replayed from the file source's offset
+      log);
     - the dedup view is STABLE: re-running dedup over the doubled frame
       (sink unioned with itself) yields the same count.
     """
-    import os as _os
     import time as _time
-    from datetime import timedelta
 
-    from hfp_fixtures import BASE, make_hfp_rows
+    from hfp_fixtures import make_hfp_rows
 
-    from transitlog_hfp_sink_spark.sources.hfp_datasource import (
-        HfpDataSource,
-        write_wire_file,
-    )
-    from transitlog_hfp_sink_spark.sources.protowire import encode_data
-    from transitlog_hfp_sink_spark.transform import dedup_vehicles, hfp_split
+    from transitlog_hfp_sink_spark.transform import dedup_vehicles
 
-    spark.dataSource.register(HfpDataSource)
     d = tmp_path / "captures"
     d.mkdir()
     out = str(tmp_path / "sink")
+    dead = str(tmp_path / "dead")
     ckpt = str(tmp_path / "ckpt")
 
     template = make_hfp_rows()[0]  # valid row, parseable tst
     n_files, per_file = 30, 400
     total = n_files * per_file
-
-    def message(seq: int) -> bytes:
-        topic = dict(template["topic"])
-        payload = dict(template["payload"])
-        ts = BASE + timedelta(seconds=seq)
-        topic["unique_vehicle_id"] = f"{seq % 7:04d}/{seq % 40:05d}"
-        payload["tst"] = ts.strftime("%Y-%m-%dT%H:%M:%S.000")
-        payload["tsi"] = int(ts.timestamp())
-        return encode_data(topic, payload)
-
     produced = {"files": 0}
 
     def producer():
         for idx in range(n_files):
-            msgs = [message(idx * per_file + j) for j in range(per_file)]
-            tmp = str(d / f"cap-{idx:06d}.tmp")
-            write_wire_file(tmp, msgs)
-            _os.rename(tmp, str(d / f"cap-{idx:06d}.hfpw"))
+            msgs = [_wire_message(template, idx * per_file + j) for j in range(per_file)]
+            _write_wire_file(str(d / f"cap-{idx:06d}.parquet"), msgs)
             produced["files"] = idx + 1
             _time.sleep(0.4)
 
-    def sink(raw_df, batch_id):
-        valid, _dead = hfp_split(raw_df)
-        (
-            valid.select(
-                "unique_vehicle_id", "tst", "event_type", "journey_type",
-                "received_at",
-            )
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    def start_query():
-        return (
-            spark.readStream.format("hfp")
-            .load(str(d))
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="1 second")
-            .start()
-        )
-
     prod = threading.Thread(target=producer)
     prod.start()
-    q = start_query()
+    q = _start_wire_pipeline(spark, str(d), out, dead, ckpt)
     # mid-run kill: wait until roughly a third of the captures exist and
     # some batches committed, then stop with the producer still rolling
     deadline = _time.time() + 120
@@ -442,7 +449,7 @@ def test_hfp_datasource_soak_kill_recovery_zero_loss(spark, tmp_path):
     _time.sleep(2)  # let a batch be genuinely in flight
     q.stop()
 
-    q2 = start_query()
+    q2 = _start_wire_pipeline(spark, str(d), out, dead, ckpt)
     prod.join(timeout=300)
     assert produced["files"] == n_files, "producer did not finish"
     # drain: poll the sink until the dedup view covers every message
@@ -469,7 +476,7 @@ def test_hfp_datasource_soak_kill_recovery_zero_loss(spark, tmp_path):
     assert dedup_vehicles(written.unionByName(written)).count() == total
 
 
-def test_hfp_datasource_corrupt_payload_injection_dead_letters(spark, tmp_path):
+def test_wire_stream_corrupt_payload_injection_dead_letters(spark, tmp_path):
     """Round 8: one corrupt Pulsar message must never crash the pipeline
     (MessageProcessor.java:118 invalid-schema branch) — it dead-letters
     as a schema_valid=false row while every valid neighbor lands exactly
@@ -479,16 +486,10 @@ def test_hfp_datasource_corrupt_payload_injection_dead_letters(spark, tmp_path):
     closed — a known field arriving on the WRONG wire type (one tag byte
     turns a length-delimited string into a varint), which previously
     escaped the dead-letter catch as a task-killing TypeError."""
-    import os as _os
     import time as _time
-    from datetime import timedelta
 
-    from hfp_fixtures import BASE, make_hfp_rows
+    from hfp_fixtures import make_hfp_rows
 
-    from transitlog_hfp_sink_spark.sources.hfp_datasource import (
-        HfpDataSource,
-        write_wire_file,
-    )
     from transitlog_hfp_sink_spark.sources.protowire import (
         INVALID_WIRE_BYTES,
         PAYLOAD_FIELDS,
@@ -498,11 +499,9 @@ def test_hfp_datasource_corrupt_payload_injection_dead_letters(spark, tmp_path):
         _varint,
         _WT_LEN,
         _WT_VARINT,
-        encode_data,
     )
-    from transitlog_hfp_sink_spark.transform import dedup_vehicles, hfp_split
+    from transitlog_hfp_sink_spark.transform import dedup_vehicles
 
-    spark.dataSource.register(HfpDataSource)
     d = tmp_path / "captures"
     d.mkdir()
     out_valid = str(tmp_path / "sink_valid")
@@ -510,17 +509,7 @@ def test_hfp_datasource_corrupt_payload_injection_dead_letters(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     template = make_hfp_rows()[0]
-
-    def message(seq: int) -> bytes:
-        topic = dict(template["topic"])
-        payload = dict(template["payload"])
-        ts = BASE + timedelta(seconds=seq)
-        topic["unique_vehicle_id"] = f"{seq % 7:04d}/{seq % 40:05d}"
-        payload["tst"] = ts.strftime("%Y-%m-%dT%H:%M:%S.000")
-        payload["tsi"] = int(ts.timestamp())
-        return encode_data(topic, payload)
-
-    valid_msg = message(0)
+    valid_msg = _wire_message(template, 0)
     topic_num = {name: num for num, name, _ in TOPIC_FIELDS}
     good_payload = _encode_msg(PAYLOAD_FIELDS, dict(template["payload"]))
     # route_id (a string field) carried as a varint — the wire-type clash
@@ -551,29 +540,12 @@ def test_hfp_datasource_corrupt_payload_injection_dead_letters(spark, tmp_path):
     for idx in range(n_files):
         msgs: list[bytes] = []
         for j in range(per_file):
-            msgs.append(message(idx * per_file + j))
+            msgs.append(_wire_message(template, idx * per_file + j))
             if j % 20 == 0:  # interleave all 5 corruption classes per file
                 msgs.append(corrupt[(j // 20) % len(corrupt)])
-        tmp = str(d / f"cap-{idx:06d}.tmp")
-        write_wire_file(tmp, msgs)
-        _os.rename(tmp, str(d / f"cap-{idx:06d}.hfpw"))
+        _write_wire_file(str(d / f"cap-{idx:06d}.parquet"), msgs)
 
-    def sink(raw_df, batch_id):
-        valid, dead = hfp_split(raw_df)
-        valid.select(
-            "unique_vehicle_id", "tst", "event_type", "journey_type",
-            "received_at",
-        ).write.mode("append").parquet(out_valid)
-        dead.select("reject_reason").write.mode("append").parquet(out_dead)
-
-    q = (
-        spark.readStream.format("hfp")
-        .load(str(d))
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="1 second")
-        .start()
-    )
+    q = _start_wire_pipeline(spark, str(d), out_valid, out_dead, ckpt)
     deadline = _time.time() + 180
     n_dedup = n_dead = -1
     while _time.time() < deadline:
@@ -591,3 +563,5 @@ def test_hfp_datasource_corrupt_payload_injection_dead_letters(spark, tmp_path):
     assert alive, "streaming query died on a corrupt payload"
     assert n_dedup == total_valid, (n_dedup, total_valid)
     assert n_dead == total_corrupt, (n_dead, total_corrupt)
+    reasons = spark.read.parquet(out_dead).groupBy("reject_reason").count().collect()
+    assert {r[0]: r[1] for r in reasons} == {"invalid_protobuf_schema": total_corrupt}

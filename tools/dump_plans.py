@@ -1,8 +1,8 @@
-"""Dump `.explain("formatted")` for every benched query to plans/r12/.
+"""Dump `.explain("formatted")` for every benched query to plans/<subdir>/.
 
-Usage: python tools/dump_plans_r11.py <suffix> [query ...]
+Usage: python tools/dump_plans.py <subdir> <suffix> [query ...]
 
-Writes plans/r12/<query>_<suffix>.txt (suffix = before|after) for every
+Writes plans/<subdir>/<query>_<suffix>.txt (suffix = before|after) for every
 headline bench query plus the TPC-H tail shapes — the optimization-round
 evidence files. Queries whose registry callable executes side work on
 construction are substituted the same way tools/gen_plans.py does, so the
@@ -17,14 +17,18 @@ from transitlog_hfp_sink_spark.session import build_session
 from transitlog_hfp_sink_spark.plans.inspect import explain_str
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r12")
+PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "plans")
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    os.makedirs(OUT, exist_ok=True)
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    subdir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    only = set(sys.argv[3:])
+    out = os.path.join(PLANS, subdir)
+    os.makedirs(out, exist_ok=True)
 
     from bench import BENCH_QUERIES, bench_overrides
     from transitlog_hfp_sink_spark.queries import queries, power, relational
@@ -50,7 +54,7 @@ def main() -> None:
     }
 
     spark = build_session(
-        app_name="dump-plans-r11", master="local[4]", shuffle_partitions=4,
+        app_name=f"dump-plans-{subdir}", master="local[4]", shuffle_partitions=4,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     failed = []
@@ -66,7 +70,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — record and keep dumping
             failed.append((name, repr(e)[:200]))
             continue
-        with open(os.path.join(OUT, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(out, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         print(name, flush=True)
     spark.stop()

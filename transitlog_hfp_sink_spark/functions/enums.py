@@ -10,10 +10,8 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from transitlog_hfp_sink_spark.schema import ENUM_DOMAINS
 
 
 def validate_enum(col: Column | str, domain: Iterable[str]) -> Column:
@@ -25,25 +23,3 @@ def validate_enum(col: Column | str, domain: Iterable[str]) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.when(c.isin(*sorted(domain)), c).otherwise(F.lit(None).cast("string"))
-
-
-def enum_violations(df: DataFrame) -> DataFrame:
-    """Rows of (column, value, n) counting out-of-domain enum values —
-    the observability half of the PG CHECK constraint."""
-    parts = []
-    for name, domain in ENUM_DOMAINS.items():
-        if name not in df.columns:
-            continue
-        c = F.col(name)
-        parts.append(
-            df.where(c.isNotNull() & ~c.isin(*sorted(domain)))
-            .groupBy(c.alias("value"))
-            .agg(F.count("*").alias("n"))
-            .select(F.lit(name).alias("column"), "value", "n")
-        )
-    if not parts:
-        raise ValueError("no enum columns present")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

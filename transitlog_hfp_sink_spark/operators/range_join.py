@@ -54,9 +54,3 @@ def range_join(
     )
     out = pb.join(ib, on="__bucket", how=how).where(cond).drop("__bucket")
     return out
-
-
-def range_filter(df: DataFrame, col: str, lo, hi) -> DataFrame:
-    """Constant time-range scan (the BRIN/oday workload, SURVEY §2.5 Q5):
-    a plain pushed-down predicate — parquet row-group stats prune it."""
-    return df.where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))

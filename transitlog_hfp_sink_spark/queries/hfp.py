@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.functions.units import dec_units, units_double
 from transitlog_hfp_sink_spark.sources.files import read_table
-from transitlog_hfp_sink_spark.transform import hfp_flatten
+from transitlog_hfp_sink_spark.transform import hfp_flatten, hfp_transform
 
 JOURNEY = ["journey", "deadrun", "signoff"]
 EVENT18 = [
@@ -296,9 +296,7 @@ def q_hfp_protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = synth_hfp(read_table(spark, sf_dir, "events"))
     wire = encode_hfp_wire(raw)
-    decoded = decode_hfp_wire(wire)
-    flat = hfp_flatten(decoded.where(F.col("schema_valid")))
-    return flat.where(F.col("tst").isNotNull())
+    return hfp_transform(decode_hfp_wire(wire))
 
 
 def q_hfp_vp_per_route(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -377,29 +377,6 @@ GROUP BY user_id, session_id
 """
 
 
-def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE session_window aggregation (the engine-provided
-    session operator; complements the lag+cumsum batch twin and the
-    custom stateful streaming op). Window end = last event + gap."""
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-
-
 def q_asof_error_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each 'error' event, the latest prior-or-equal
     'click' by the same user (point-in-time enrichment — the stop/schedule

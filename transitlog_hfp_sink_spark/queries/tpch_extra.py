@@ -51,16 +51,6 @@ def _dec(col, prec: int = 18, scale: int = 2):
     return c.cast(f"decimal({prec},{scale})")
 
 
-# Column expressions must be built lazily: F.lit() needs an active
-# SparkContext, and this module may be imported before the session exists.
-def _one():
-    return F.lit(1).cast("decimal(18,2)")
-
-
-def _disc_price():
-    return _dec("l_extendedprice") * (_one() - _dec("l_discount"))
-
-
 # --------------------------------------------------------------------------
 # q6: forecast revenue change — single-table filter + scalar agg.
 # Predicates (shipdate range, discount band, quantity cap) all push to the

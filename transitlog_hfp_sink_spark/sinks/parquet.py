@@ -41,8 +41,3 @@ def write_vehicles_parquet(
     out = out.repartition(files_per_hour, *PARTITION_COLUMNS, "unique_vehicle_id")
     out = out.sortWithinPartitions(*PARTITION_COLUMNS, "unique_vehicle_id", "tst")
     out.write.mode(mode).partitionBy(*PARTITION_COLUMNS).parquet(path)
-
-
-def read_vehicles_parquet(spark, path: str) -> DataFrame:
-    """Read back; partition columns become queryable pruning columns."""
-    return spark.read.parquet(path)

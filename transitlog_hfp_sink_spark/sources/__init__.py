@@ -2,7 +2,6 @@
 analytics tables."""
 
 from transitlog_hfp_sink_spark.sources.files import (
-    read_hfp_batch,
     read_hfp_stream,
     read_table,
     read_tables,
@@ -10,7 +9,6 @@ from transitlog_hfp_sink_spark.sources.files import (
 from transitlog_hfp_sink_spark.sources.synthetic import synthetic_hfp_stream
 
 __all__ = [
-    "read_hfp_batch",
     "read_hfp_stream",
     "read_table",
     "read_tables",

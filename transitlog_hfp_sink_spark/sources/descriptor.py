@@ -130,12 +130,3 @@ def build_file_descriptor_set() -> bytes:
         file_body += _ld(5, _enum(ename, _ENUMS[key]))  # enum_type = 5
     file_body += _s(12, "proto2")  # syntax = 12
     return _ld(1, file_body)  # FileDescriptorSet.file = 1
-
-
-def write_descriptor(path: str | None = None) -> str:
-    """(Re)generate the checked-in compiled descriptor; returns the path."""
-    p = path or RESOURCE
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    with open(p, "wb") as f:
-        f.write(build_file_descriptor_set())
-    return p

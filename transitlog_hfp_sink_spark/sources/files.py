@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
+from transitlog_hfp_sink_spark.sources.protowire import decode_hfp_wire
 
 TABLES = (
     "region",
@@ -110,13 +111,6 @@ def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_table(spark, sf_dir, t) for t in TABLES}
 
 
-def read_hfp_batch(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Batch read of HFP_RAW_SCHEMA-shaped fixtures."""
-    if fmt == "json":
-        return spark.read.schema(HFP_RAW_SCHEMA).json(path)
-    return spark.read.schema(HFP_RAW_SCHEMA).parquet(path)
-
-
 def read_hfp_stream(
     spark: SparkSession,
     path_or_topic: str,
@@ -133,6 +127,10 @@ def read_hfp_stream(
       replaces the reference's queue-full drop (SURVEY §2.2 F2).
     fmt="kafka": options carry kafka.bootstrap.servers / subscribe;
       maxOffsetsPerTrigger is the rate limit.
+
+    Connector frames carry each ``Hfp.Data`` message in their binary
+    ``value`` column; they come back decoded by ``decode_hfp_wire`` as
+    HFP_RAW_SCHEMA rows, so every source feeds ``hfp_split`` the same way.
     """
     if fmt in ("parquet", "json"):
         reader = spark.readStream.schema(HFP_RAW_SCHEMA).format(fmt)
@@ -148,4 +146,4 @@ def read_hfp_stream(
         reader = reader.option("subscribe", path_or_topic)
     for k, v in options.items():
         reader = reader.option(k, v)
-    return reader.load()
+    return decode_hfp_wire(reader.load())

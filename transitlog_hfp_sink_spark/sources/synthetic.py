@@ -14,10 +14,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _zpad(col, width: int):
+    """format_string's %0Nd for 0 <= col < 10**width without a
+    java.util.Formatter per row: one '0' for each power of ten col is
+    below, then its digits."""
+    zeros = [F.when(col < 10**k, F.lit("0")).otherwise(F.lit("")) for k in range(1, width)]
+    return F.concat(*zeros, col.cast("string"))
+
+
 def _hfp_columns(df: DataFrame) -> DataFrame:
     v = F.col("value")
     veh = (v % 1000).cast("int")
     oper = (v % 50).cast("int")
+    hh_mm = F.concat(_zpad(v % 24, 2), F.lit(":"), _zpad(v % 60, 2))
     return df.select(
         F.lit(True).alias("schema_valid"),
         F.struct(
@@ -35,13 +44,11 @@ def _hfp_columns(df: DataFrame) -> DataFrame:
             F.lit("bus").alias("transport_mode"),
             oper.alias("operator_id"),
             veh.alias("vehicle_number"),
-            F.format_string("%04d/%05d", oper, veh).alias("unique_vehicle_id"),
+            F.concat(_zpad(oper, 4), F.lit("/"), _zpad(veh, 5)).alias("unique_vehicle_id"),
             F.concat(F.lit("2"), (v % 550).cast("string")).alias("route_id"),
             (v % 2 + 1).cast("int").alias("direction_id"),
             F.lit("Itäkeskus").alias("headsign"),
-            F.format_string("%02d:%02d", (v % 24).cast("int"), (v % 60).cast("int")).alias(
-                "start_time"
-            ),
+            hh_mm.alias("start_time"),
             (v % 9999).cast("string").alias("next_stop"),
             (v % 6).cast("int").alias("geohash_level"),
             (F.lit(60.0) + (v % 1000) / 2000.0).alias("latitude"),
@@ -65,9 +72,7 @@ def _hfp_columns(df: DataFrame) -> DataFrame:
             F.date_format(F.col("timestamp"), "yyyy-MM-dd").alias("oday"),
             (v % 100000).cast("int").alias("jrn"),
             (v % 550).cast("int").alias("line"),
-            F.format_string("%02d:%02d", (v % 24).cast("int"), (v % 60).cast("int")).alias(
-                "start"
-            ),
+            hh_mm.alias("start"),
             F.lit("GPS").alias("loc"),
             (v % 9999).cast("int").alias("stop"),
             (v % 550).cast("string").alias("route"),

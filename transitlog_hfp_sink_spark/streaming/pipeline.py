@@ -20,16 +20,21 @@ state bounded by the watermark, which is what makes it viable at 100 TB/day.
 from __future__ import annotations
 
 import logging
+from collections import deque
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from transitlog_hfp_sink_spark.transform import hfp_split
 
 logger = logging.getLogger(__name__)
+
+#: progress entries RateLoggingListener keeps: the newest ones, so a
+#: long-running app holds a fixed-size history (~17 min at a 1 s trigger)
+PROGRESS_HISTORY = 1024
 
 
 class RateLoggingListener(StreamingQueryListener):
@@ -38,7 +43,7 @@ class RateLoggingListener(StreamingQueryListener):
     Streaming computes both natively per progress event."""
 
     def __init__(self) -> None:
-        self.progress: list[dict] = []
+        self.progress: deque[dict] = deque(maxlen=PROGRESS_HISTORY)
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
         logger.info("query started id=%s", event.id)
@@ -108,27 +113,3 @@ class HfpPipeline:
             .trigger(processingTime=f"{self.trigger_seconds} seconds")
             .start()
         )
-
-
-def run_until_rows(
-    spark: SparkSession,
-    query: StreamingQuery,
-    min_rows: int,
-    timeout_s: float = 120.0,
-) -> None:
-    """Test helper: block until the sink has seen min_rows or timeout."""
-    import time
-
-    t0 = time.time()
-    total = 0
-    while time.time() - t0 < timeout_s:
-        lp = query.lastProgress
-        if lp:
-            total = max(total, lp.get("batchId", 0))
-        if query.exception():
-            raise RuntimeError(query.exception())
-        time.sleep(0.2)
-        recent = query.recentProgress
-        if sum(p.get("numInputRows", 0) for p in recent) >= min_rows:
-            return
-    raise TimeoutError(f"stream did not reach {min_rows} rows in {timeout_s}s")

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.functions.timeparse import safe_parse_time
-from transitlog_hfp_sink_spark.schema import VEHICLES_COLUMNS
 
 # try_* expressions keep null-on-malformed semantics under ANSI mode
 # (Spark 4 defaults spark.sql.ansi.enabled=true, where plain CAST throws).
@@ -149,11 +148,3 @@ def dedup_vehicles(df: DataFrame) -> DataFrame:
     watermark to bound state.
     """
     return df.dropDuplicates(["unique_vehicle_id", "tst", "event_type", "journey_type"])
-
-
-def assert_vehicles_schema(df: DataFrame) -> None:
-    """Cheap structural check: the 40 columns, in DDL order."""
-    if df.columns[: len(VEHICLES_COLUMNS)] != VEHICLES_COLUMNS:
-        raise AssertionError(
-            f"vehicles schema drift: {df.columns} != {VEHICLES_COLUMNS}"
-        )
