@@ -16,11 +16,12 @@ def test_app_subprocess_end_to_end(spark, tmp_path):
     from hfp_fixtures import make_hfp_rows
 
     from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
+    from transitlog_hfp_sink_spark.sources.protowire import encode_hfp_wire
 
     drops = str(tmp_path / "drops")
     out = str(tmp_path / "vehicles")
     raw = spark.createDataFrame(make_hfp_rows(200), schema=HFP_RAW_SCHEMA)
-    raw.coalesce(2).write.parquet(drops)
+    encode_hfp_wire(raw.coalesce(2)).write.parquet(drops)
 
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     proc = subprocess.run(
@@ -180,7 +181,7 @@ def test_app_refresh_rollup_subcommand(spark, tmp_path):
 
 @pytest.mark.slow
 def test_app_backfill_subcommand_idempotent(spark, tmp_path):
-    """backfill subcommand: reprocess raw drops into an existing sink via
+    """backfill subcommand: reprocess wire drops into an existing sink via
     natural-key MERGE — overlapping rows don't duplicate, new rows land,
     and re-running the same backfill is a no-op."""
     import json
@@ -191,6 +192,7 @@ def test_app_backfill_subcommand_idempotent(spark, tmp_path):
 
     from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
     from transitlog_hfp_sink_spark.sinks.parquet import write_vehicles_parquet
+    from transitlog_hfp_sink_spark.sources.protowire import encode_hfp_wire
     from transitlog_hfp_sink_spark.transform import hfp_split
 
     rows = make_hfp_rows(200)
@@ -202,9 +204,9 @@ def test_app_backfill_subcommand_idempotent(spark, tmp_path):
     write_vehicles_parquet(valid_first, sink_path, mode="overwrite")
     n_initial = spark.read.parquet(sink_path).count()
 
-    # raw drops for the backfill: overlap (first) + the rest
+    # wire drops for the backfill: overlap (first) + the rest
     drops = str(tmp_path / "drops")
-    raw.coalesce(2).write.parquet(drops)
+    encode_hfp_wire(raw.coalesce(2)).write.parquet(drops)
     valid_all, _ = hfp_split(raw)
     n_expected = valid_all.dropDuplicates(
         ["unique_vehicle_id", "tst", "event_type", "journey_type"]

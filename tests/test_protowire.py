@@ -155,6 +155,68 @@ def test_wire_dataframe_roundtrip(spark, sf_dir):
     raw.unpersist()
 
 
+def test_wire_decode_schema_and_crash_classes(spark):
+    """decode_hfp_wire's output schema is pinned: HFP_RAW_SCHEMA's names
+    and types, a nullable schema_valid, non-null topic/payload structs and
+    all-nullable fields (a dead-letter row carries all-NULL structs). A
+    NULL frame and an int32 field whose varint overflows int32 become
+    schema_valid=false rows instead of failing the task."""
+    from pyspark.sql import types as T
+
+    from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
+    from transitlog_hfp_sink_spark.sources.protowire import (
+        _tag,
+        _varint,
+        _WT_LEN,
+        _WT_VARINT,
+        _encode_msg,
+        decode_hfp_wire,
+    )
+
+    def nullable(st):
+        return T.StructType([T.StructField(f.name, f.dataType, True) for f in st.fields])
+
+    expected = T.StructType([
+        T.StructField("schema_valid", T.BooleanType(), True),
+        T.StructField("topic", nullable(HFP_RAW_SCHEMA["topic"].dataType), False),
+        T.StructField("payload", nullable(HFP_RAW_SCHEMA["payload"].dataType), False),
+    ])
+    topic_num = {name: num for num, name, _ in TOPIC_FIELDS}
+    big_topic = _tag(topic_num["operator_id"], _WT_VARINT) + _varint(2**40)
+    payload = _encode_msg(PAYLOAD_FIELDS, _full_payload())
+    overflow = (
+        _tag(2, _WT_LEN) + _varint(len(big_topic)) + big_topic
+        + _tag(3, _WT_LEN) + _varint(len(payload)) + payload
+    )
+    frames = [None, overflow, encode_data(_full_topic(), _full_payload())]
+    df = spark.createDataFrame(
+        [(i, None if f is None else bytearray(f)) for i, f in enumerate(frames)],
+        "i int, value binary",
+    ).coalesce(1)
+    decoded = decode_hfp_wire(df)
+    assert decoded.schema == expected
+    rows = decoded.collect()
+    assert [r["schema_valid"] for r in rows] == [False, False, True]
+    assert rows[0]["topic"] is not None and set(rows[0]["topic"].asDict().values()) == {None}
+    assert rows[2]["topic"].asDict() == _full_topic()
+
+
+def test_out_of_range_varints_raise_value_error():
+    """An int32 field outside int32, and a varint wider than 64 bits, are
+    malformed messages: ValueError, inside the dead-letter contract."""
+    from transitlog_hfp_sink_spark.sources.protowire import _read_varint
+
+    with pytest.raises(ValueError, match="overflows"):
+        _read_varint(b"\xff" * 9 + b"\x7f", 0)
+    t = _full_topic()
+    for value in (2**31, -(2**31) - 1):
+        t["vehicle_number"] = value
+        with pytest.raises(ValueError, match="vehicle_number"):
+            decode_data(encode_data(t, _full_payload()))
+    t["vehicle_number"] = -(2**31)
+    assert decode_data(encode_data(t, _full_payload()))[0]["vehicle_number"] == -(2**31)
+
+
 # ---------------------------------------------------------------------------
 # Compiled descriptor set (sources/descriptor.py) + gated spark-protobuf leg
 # ---------------------------------------------------------------------------
@@ -197,7 +259,7 @@ def test_descriptor_structure_mirrors_wire_tables():
     names, field numbers, and enum value numbering must equal the wire
     codec's tables (what protoc would have been given)."""
     from transitlog_hfp_sink_spark.sources.descriptor import build_file_descriptor_set
-    from transitlog_hfp_sink_spark.sources.protowire import _ENUMS
+    from transitlog_hfp_sink_spark.schema import ENUM_DOMAINS
 
     (fdset_field,) = _walk_msg(build_file_descriptor_set())
     assert fdset_field[0] == 1  # FileDescriptorSet.file
@@ -239,11 +301,11 @@ def test_descriptor_structure_mirrors_wire_tables():
             enums[ename] = vals
     # every codec enum appears with 0-based contiguous numbering in order
     expected_enums = {
-        "JourneyType": _ENUMS["journey_type"],
-        "TemporalType": _ENUMS["temporal_type"],
-        "EventType": _ENUMS["event_type"],
-        "TransportMode": _ENUMS["transport_mode"],
-        "LocationQualityMethod": _ENUMS["loc"],
+        "JourneyType": ENUM_DOMAINS["journey_type"],
+        "TemporalType": ENUM_DOMAINS["temporal_type"],
+        "EventType": ENUM_DOMAINS["event_type"],
+        "TransportMode": ENUM_DOMAINS["transport_mode"],
+        "LocationQualityMethod": ENUM_DOMAINS["loc"],
     }
     for ename, domain in expected_enums.items():
         assert enums[ename] == [(v, i) for i, v in enumerate(domain)]
@@ -285,7 +347,7 @@ import struct
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from transitlog_hfp_sink_spark.sources.protowire import _ENUMS
+from transitlog_hfp_sink_spark.schema import ENUM_DOMAINS
 
 
 def _field_strategy(kind: str):
@@ -298,7 +360,7 @@ def _field_strategy(kind: str):
     elif kind == "dbl":
         base = st.floats(allow_nan=True, allow_infinity=True)
     else:
-        base = st.sampled_from(_ENUMS[kind.split(":", 1)[1]])
+        base = st.sampled_from(ENUM_DOMAINS[kind.split(":", 1)[1]])
     return st.one_of(st.none(), base)
 
 
@@ -342,7 +404,7 @@ def test_descriptor_validates_with_real_protobuf_parser(spark):
     then cross-checked against the wire codec's tables, leaving connector
     presence as the only untested step of the from_protobuf leg."""
     from transitlog_hfp_sink_spark.sources.descriptor import RESOURCE
-    from transitlog_hfp_sink_spark.sources.protowire import _ENUMS
+    from transitlog_hfp_sink_spark.schema import ENUM_DOMAINS
 
     jvm = spark._jvm
     gw = spark.sparkContext._gateway
@@ -390,7 +452,7 @@ def test_descriptor_validates_with_real_protobuf_parser(spark):
     } == {"schema_version": 1, "topic": 2, "payload": 3}
     for field, ename in enum_by_field.items():
         et = fd.findEnumTypeByName(ename)
-        domain = _ENUMS[field]
+        domain = ENUM_DOMAINS[field]
         assert et.getValues().size() == len(domain)
         for i, v in enumerate(domain):
             assert et.getValues().get(i).getName() == v

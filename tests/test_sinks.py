@@ -22,9 +22,10 @@ def test_jdbc_properties_enum_and_batching():
     assert set(ENUM_CAST) == {"journey_type", "event_type", "mode", "loc"}
 
 
-def test_jdbc_retry_then_crash(spark):
+def test_jdbc_retry_then_crash(spark, monkeypatch):
     """Unreachable DB: the sink must retry max_retries times, then raise
-    (query dies WITHOUT committing offsets -> replay on restart)."""
+    (query dies WITHOUT committing offsets -> replay on restart). The
+    attempt log keeps only the newest entries however many batches run."""
     df = spark.range(3).select(F.col("id").alias("veh"))
     sink = JdbcVehiclesSink(
         url="jdbc:postgresql://127.0.0.1:1/nope",
@@ -35,6 +36,21 @@ def test_jdbc_retry_then_crash(spark):
     with pytest.raises(Exception):
         sink(df, batch_id=7)
     assert [a for (_, a, ok) in sink.attempts_log if not ok] == [1, 2, 3]
+
+    from transitlog_hfp_sink_spark.sinks import jdbc
+
+    monkeypatch.setattr(jdbc, "ATTEMPTS_HISTORY", 2)
+    capped = JdbcVehiclesSink(url="jdbc:unused", max_retries=3, retry_backoff_s=0.0)
+    outcomes = iter([Exception("down"), Exception("down"), None])
+
+    def write_once(df):
+        err = next(outcomes)
+        if err is not None:
+            raise err
+
+    monkeypatch.setattr(capped, "_write_once", write_once)
+    capped(df, batch_id=8)
+    assert list(capped.attempts_log) == [(8, 2, False), (8, 3, True)]
 
 
 def test_vehicles_ddl_bootstrap(spark):
@@ -52,12 +68,13 @@ def test_vehicles_ddl_bootstrap(spark):
 
 def test_config_env_overrides(monkeypatch):
     monkeypatch.setenv("DUMP_INTERVAL", "5")
-    monkeypatch.setenv("PULSAR_TOPIC", "hfp-test")
+    monkeypatch.setenv("CHECKPOINT_LOCATION", "/data/ckpt")
     cfg = PipelineConfig.from_env()
     assert cfg.dump_interval_s == 5.0
-    assert cfg.source_topic == "hfp-test"
-    assert cfg.subscription == "transitlog-hfp-sink-sub"
+    assert cfg.checkpoint == "/data/ckpt"
     assert cfg.max_rows_per_trigger == 250_000  # F2 replacement default
+    monkeypatch.setenv("MAX_ROWS_PER_TRIGGER", "1000")
+    assert PipelineConfig.from_env().max_rows_per_trigger == 1000
 
 
 def test_connection_string_sources(tmp_path, monkeypatch):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
 from transitlog_hfp_sink_spark.sources import read_hfp_stream
+from transitlog_hfp_sink_spark.sources.protowire import decode_hfp_wire, encode_hfp_wire
 from transitlog_hfp_sink_spark.streaming import HfpPipeline
 from tests.hfp_fixtures import make_hfp_rows
 
@@ -22,11 +23,16 @@ def _wait(predicate, timeout_s=90.0, poll=0.3):
     return False
 
 
+def _write_wire_drops(spark, rows, path, n_files):
+    """Fixture rows as ``value binary`` wire files, one message per row."""
+    raw = spark.createDataFrame(rows, schema=HFP_RAW_SCHEMA).repartition(n_files)
+    encode_hfp_wire(raw).write.mode("append").parquet(path)
+
+
 @pytest.fixture()
 def drops_dir(spark, tmp_path):
-    raw = spark.createDataFrame(make_hfp_rows(400), schema=HFP_RAW_SCHEMA)
     path = str(tmp_path / "drops")
-    raw.repartition(8).write.parquet(path)
+    _write_wire_drops(spark, make_hfp_rows(400), path, 8)
     return path
 
 
@@ -81,8 +87,7 @@ def test_stream_checkpoint_recovery_no_reprocess(spark, tmp_path, drops_dir):
     first_total = spark.read.parquet(out).count()
 
     # add new input, restart from the same checkpoint
-    extra = spark.createDataFrame(make_hfp_rows(100, seed=99), schema=HFP_RAW_SCHEMA)
-    extra.coalesce(1).write.mode("append").parquet(drops_dir)
+    _write_wire_drops(spark, make_hfp_rows(100, seed=99), drops_dir, 1)
     q2 = pipe.start(read_hfp_stream(spark, drops_dir, max_files_per_trigger=8))
     try:
         assert _wait(lambda: spark.read.parquet(out).count() > first_total)
@@ -99,7 +104,7 @@ def test_stream_checkpoint_recovery_no_reprocess(spark, tmp_path, drops_dir):
     assert final_total - first_total < first_total
     from transitlog_hfp_sink_spark.transform import dedup_vehicles, hfp_split
 
-    all_raw = spark.read.schema(HFP_RAW_SCHEMA).parquet(drops_dir)
+    all_raw = decode_hfp_wire(spark.read.parquet(drops_dir))
     expected = dedup_vehicles(hfp_split(all_raw)[0]).count()
     assert dedup_vehicles(spark.read.parquet(out)).count() == expected
 
@@ -270,11 +275,14 @@ def test_connector_stream_frames_are_decoded(spark, tmp_path):
     jars are not on the classpath, so a test-only stream source registered
     as format "pulsar" stands in: it emits Pulsar-shaped frames whose
     binary value column carries Hfp.Data wire bytes, one per fixture row
-    (undecodable bytes for the invalid-schema rows)."""
+    (undecodable bytes for the invalid-schema rows), plus one NULL frame,
+    which must dead-letter rather than fail the batch. The reader also
+    checks that the F2 rate limit reaches the connector."""
     from pyspark.errors import AnalysisException
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
     from transitlog_hfp_sink_spark.app import make_sink
+    from transitlog_hfp_sink_spark.config import PipelineConfig
     from transitlog_hfp_sink_spark.sources.protowire import (
         INVALID_WIRE_BYTES,
         encode_data,
@@ -286,11 +294,13 @@ def test_connector_stream_frames_are_decoded(spark, tmp_path):
         encode_data(dict(r["topic"]), dict(r["payload"]))
         if r["schema_valid"] else INVALID_WIRE_BYTES
         for r in rows
-    ]
+    ] + [None]  # a NULL frame, e.g. a Kafka tombstone
+    rate_limit = PipelineConfig().max_rows_per_trigger
 
     class FakePulsarReader(SimpleDataSourceStreamReader):
         def __init__(self, options):
             assert options.get("topic") == "hfp-data", options
+            assert options.get("maxEntriesPerTrigger") == str(rate_limit), options
 
         def initialOffset(self):  # noqa: N802
             return {"entry": 0}
@@ -335,13 +345,15 @@ def test_connector_stream_frames_are_decoded(spark, tmp_path):
         sink=make_sink(f"parquet:{sink}"), checkpoint=str(tmp_path / "ckpt"),
         trigger_seconds=0.3, dead_letter_path=dead,
     )
-    q = pipe.start(read_hfp_stream(spark, "hfp-data", fmt="pulsar"))
+    q = pipe.start(read_hfp_stream(
+        spark, "hfp-data", fmt="pulsar", max_rows_per_trigger=rate_limit
+    ))
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     assert spark.read.parquet(sink).count() == want_valid
-    assert spark.read.parquet(dead).count() == want_dead
+    assert spark.read.parquet(dead).count() == want_dead + 1  # + the NULL frame
 
 
 def test_cross_batch_dedup_within_watermark(spark, tmp_path):
@@ -382,69 +394,6 @@ def test_cross_batch_dedup_within_watermark(spark, tmp_path):
     rows = [(r["user_id"], str(r["ts"])) for r in spark.table("xdedup").collect()]
     assert len(rows) == 3  # the replayed (1, base) did NOT appear twice
     assert len(set(rows)) == 3
-
-
-def test_transform_with_state_twin_matches_apply_in_pandas(spark, tmp_path, sf_dir):
-    """The transformWithStateInPandas sessionizer (successor API, RocksDB
-    state store) must produce EXACTLY the applyInPandasWithState result
-    over the same bounded input. Skips where the API's google.protobuf
-    state-protocol dependency is unavailable (this sandbox)."""
-    import importlib.util
-    import uuid
-
-    try:
-        has_pb = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_pb = False
-    if not has_pb:
-        pytest.skip("google.protobuf unavailable: transformWithState gated")
-
-    from transitlog_hfp_sink_spark.streaming.stateful import (
-        streaming_sessionize,
-        streaming_sessionize_tws,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def run(op, provider=None):
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        if provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-        try:
-            stream = (
-                spark.readStream.schema(raw_schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-            )
-            name = f"tws_{uuid.uuid4().hex[:8]}"
-            q = (
-                op(stream, gap_seconds=1800, flush_final=True)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-            return {tuple(r) for r in spark.table(name).collect()}
-        finally:
-            if provider:
-                if prev:
-                    spark.conf.set(
-                        "spark.sql.streaming.stateStore.providerClass", prev
-                    )
-                else:
-                    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    a = run(streaming_sessionize)
-    b = run(
-        streaming_sessionize_tws,
-        provider="org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    assert a == b and len(a) > 0
 
 
 def test_stream_static_broadcast_enrichment(spark, sf_dir, tmp_path):

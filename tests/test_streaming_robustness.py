@@ -380,18 +380,17 @@ def _write_wire_file(path: str, messages: list[bytes]) -> None:
 
 
 def _start_wire_pipeline(spark, src: str, sink: str, dead: str, ckpt: str):
-    """The product ingest path: wire files -> decode_hfp_wire ->
-    HfpPipeline -> the app's parquet sink, with a dead-letter path."""
+    """The product ingest path: wire files -> read_hfp_stream (which ends
+    in decode_hfp_wire) -> HfpPipeline -> the app's parquet sink, with a
+    dead-letter path."""
     from transitlog_hfp_sink_spark.app import make_sink
-    from transitlog_hfp_sink_spark.sources.protowire import decode_hfp_wire
+    from transitlog_hfp_sink_spark.sources.files import read_hfp_stream
     from transitlog_hfp_sink_spark.streaming.pipeline import HfpPipeline
 
     pipe = HfpPipeline(
         sink=make_sink(f"parquet:{sink}"), checkpoint=ckpt, dead_letter_path=dead
     )
-    return pipe.start(
-        decode_hfp_wire(spark.readStream.schema("value binary").parquet(src))
-    )
+    return pipe.start(read_hfp_stream(spark, src))
 
 
 @pytest.mark.slow

@@ -16,6 +16,11 @@ Usage::
     # $DB_CONN_STRING, README.md:40-41 parity):
     python -m transitlog_hfp_sink_spark.app --source ... --sink jdbc:vehicles
 
+Every source carries ``Hfp.Data`` wire frames: ``parquet`` drops are
+``value binary`` files (one message per row), ``pulsar``/``kafka`` are
+the connector frames (``--source`` is then the topic). All of them decode
+through ``sources.protowire.decode_hfp_wire``.
+
 Maintenance subcommands (TimescaleDB background-job parity: the
 reference's hypertable relies on compress_chunks / drop_chunks policies,
 run/init.sql:21-85; here they are explicit operator-invoked jobs over the
@@ -205,32 +210,29 @@ def _maintain_refresh_rollup(argv: list[str]) -> int:
 
 
 def _backfill(argv: list[str]) -> int:
-    """Idempotent BATCH reprocessing of raw HFP drops into the parquet
-    sink (the ops path for topic replays / late corrections): read raw,
-    run the SAME transform the stream runs, MERGE on the natural key so
-    re-running a backfill (or overlapping it with already-streamed data)
-    never duplicates rows — the M3 at-least-once story applied to batch
-    repair."""
+    """Idempotent BATCH reprocessing of HFP wire drops into the parquet
+    sink (the ops path for topic replays / late corrections): decode the
+    wire frames, run the SAME transform the stream runs, MERGE on the
+    natural key so re-running a backfill (or overlapping it with
+    already-streamed data) never duplicates rows — the M3 at-least-once
+    story applied to batch repair."""
     import json
 
     p = argparse.ArgumentParser(prog="app backfill")
-    p.add_argument("--source", required=True, help="raw drops dir (parquet/json)")
-    p.add_argument("--source-format", default="parquet", choices=["parquet", "json"])
+    p.add_argument("--source", required=True, help="wire drops dir (value binary parquet)")
     p.add_argument("--sink-path", required=True, help="partitioned vehicles store")
     p.add_argument("--dead-letter", default=None)
     args = p.parse_args(argv)
-    from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA, PARTITION_COLUMNS
+    from transitlog_hfp_sink_spark.schema import PARTITION_COLUMNS, VEHICLES_DEDUP_KEY
     from transitlog_hfp_sink_spark.sinks.merge import upsert_partitioned
+    from transitlog_hfp_sink_spark.sources.protowire import decode_hfp_wire
     from transitlog_hfp_sink_spark.transform import hfp_split, with_partition_columns
 
     spark = build_session(app_name="hfp-backfill")
     try:
-        reader = spark.read.schema(HFP_RAW_SCHEMA)
-        raw = (
-            reader.parquet(args.source)
-            if args.source_format == "parquet"
-            else reader.json(args.source)
-        )
+        # the dead-letter write and the upsert each read the decoded rows
+        # (the dead side twice); pin them so the Python decode runs once
+        raw = decode_hfp_wire(spark.read.parquet(args.source)).persist()
         valid, dead = hfp_split(raw)
         if args.dead_letter:
             dead.write.mode("append").parquet(args.dead_letter)
@@ -242,7 +244,7 @@ def _backfill(argv: list[str]) -> int:
             spark,
             args.sink_path,
             updates,
-            key_cols=["unique_vehicle_id", "tst", "event_type", "journey_type"],
+            key_cols=list(VEHICLES_DEDUP_KEY),
             partition_cols=list(PARTITION_COLUMNS),
             count_rows=True,
         )
@@ -688,7 +690,7 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--source", required=True, help="input dir (file stream) or topic")
     p.add_argument("--source-format", default="parquet",
-                   choices=["parquet", "json", "pulsar", "kafka"])
+                   choices=["parquet", "pulsar", "kafka"])
     p.add_argument("--sink", required=True, help="parquet:<path> | jdbc:<table>")
     p.add_argument("--checkpoint", default=None)
     p.add_argument("--dead-letter", default=None)
@@ -716,6 +718,7 @@ def main(argv: list[str] | None = None) -> int:
         stream = read_hfp_stream(
             spark, args.source, fmt=args.source_format,
             max_files_per_trigger=args.max_files_per_trigger,
+            max_rows_per_trigger=cfg.max_rows_per_trigger,
         )
         pipe = HfpPipeline(
             sink=make_sink(args.sink),

@@ -9,16 +9,13 @@ kwargs, secrets from file or env.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, fields
 
 _DEFAULT_SECRET_PATH = "/run/secrets/db_conn_string"  # README.md:40-41
 
 #: default <- env-var mapping (environment.conf:1-20)
 _ENV = {
     "dump_interval_s": "DUMP_INTERVAL",
-    "source_topic": "PULSAR_TOPIC",
-    "subscription": "PULSAR_SUBSCRIPTION",
-    "ack_timeout_s": "PULSAR_ACK_TIMEOUT",
     "max_rows_per_trigger": "MAX_ROWS_PER_TRIGGER",
     "checkpoint": "CHECKPOINT_LOCATION",
 }
@@ -27,17 +24,12 @@ _ENV = {
 @dataclass
 class PipelineConfig:
     dump_interval_s: float = 1.0  # environment.conf:18-19
-    source_topic: str = "hfp-data"  # environment.conf:5
-    subscription: str = "transitlog-hfp-sink-sub"  # environment.conf:7
-    ack_timeout_s: int = 300  # environment.conf:9 -> informational; Spark
-    # checkpoints replace ack bookkeeping
     # F2 replacement: the reference drops rows when its buffer passes
-    # 250 000 (MessageProcessor.java:28,103-110); source rate limiting
-    # bounds memory without data loss
+    # 250 000 (MessageProcessor.java:28,103-110); the app passes this to the
+    # pulsar/kafka source as its per-trigger rate limit, which bounds memory
+    # without data loss
     max_rows_per_trigger: int = 250_000
     checkpoint: str = "/tmp/hfp-checkpoint"
-    jdbc_url: str | None = None
-    extra: dict = field(default_factory=dict)
 
     @classmethod
     def from_env(cls, **overrides) -> "PipelineConfig":

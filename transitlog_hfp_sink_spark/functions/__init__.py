@@ -10,6 +10,5 @@ from transitlog_hfp_sink_spark.functions.timeparse import (
     safe_parse_time,
     time_to_seconds,
 )
-from transitlog_hfp_sink_spark.functions.enums import validate_enum
 
-__all__ = ["safe_parse_time", "time_to_seconds", "validate_enum"]
+__all__ = ["safe_parse_time", "time_to_seconds"]

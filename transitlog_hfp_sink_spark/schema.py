@@ -3,8 +3,8 @@
 Derived from the reference DDL (/root/reference/run/init.sql:21-68) and the
 input protobuf usage (/root/reference/src/main/java/fi/hsl/transitlog/hfp/
 QueueWriter.java:57-137). One nested input schema (``HFP_RAW_SCHEMA``), one
-flat 40-column output schema (``VEHICLES_SCHEMA``), enum value domains, and
-the nullability contract.
+flat 40-column output schema (``VEHICLES_SCHEMA``), enum value domains, the
+natural dedup key, and the nullability contract.
 
 TIME representation (SURVEY §1.2 hard part #1): Spark has no TIME type; the
 reference's ``journey_start_time``/``start`` (PG TIME, init.sql:41,63) are
@@ -17,28 +17,27 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Enum domains (init.sql:21-24). Spark has no enum type -> StringType +
-# domain validation (functions.enums.validate_enum).
+# Enum domains (init.sql:21-24), keyed by HFP input field. Spark has no enum
+# type -> StringType. Tuple order is the protobuf ordinal order: the wire
+# codec (sources/protowire.py) and the compiled descriptor number each value
+# by its index, and the decoder rejects any ordinal outside the domain.
 # ---------------------------------------------------------------------------
 
-JOURNEY_TYPES = frozenset({"journey", "deadrun", "signoff"})
-
-EVENT_TYPES = frozenset(
-    {
-        "VP", "DUE", "ARR", "ARS", "PDE", "DEP", "PAS", "WAIT", "DOO",
-        "DOC", "TLR", "TLA", "DA", "DOUT", "BA", "BOUT", "VJA", "VJOUT",
-    }
+JOURNEY_TYPE_ENUM = ("journey", "deadrun", "signoff")
+TEMPORAL_TYPE_ENUM = ("ongoing", "upcoming")
+EVENT_TYPE_ENUM = (
+    "VP", "DUE", "ARR", "ARS", "PDE", "DEP", "PAS", "WAIT", "DOO",
+    "DOC", "TLR", "TLA", "DA", "DOUT", "BA", "BOUT", "VJA", "VJOUT",
 )
-
-TRANSPORT_MODES = frozenset({"bus", "train", "tram", "metro", "ferry"})
-
-LOCATION_QUALITY_METHODS = frozenset({"GPS", "ODO", "MAN", "NA"})
+TRANSPORT_MODE_ENUM = ("bus", "train", "tram", "metro", "ferry")
+LOC_ENUM = ("GPS", "ODO", "MAN", "NA")
 
 ENUM_DOMAINS = {
-    "journey_type": JOURNEY_TYPES,
-    "event_type": EVENT_TYPES,
-    "mode": TRANSPORT_MODES,
-    "loc": LOCATION_QUALITY_METHODS,
+    "journey_type": JOURNEY_TYPE_ENUM,
+    "temporal_type": TEMPORAL_TYPE_ENUM,
+    "event_type": EVENT_TYPE_ENUM,
+    "transport_mode": TRANSPORT_MODE_ENUM,
+    "loc": LOC_ENUM,
 }
 
 # ---------------------------------------------------------------------------

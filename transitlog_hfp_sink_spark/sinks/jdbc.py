@@ -22,6 +22,7 @@ the stock Spark JDBC writer.
 from __future__ import annotations
 
 import logging
+from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -38,6 +39,10 @@ ENUM_CAST = {
 
 #: Matches the reference's consecutive-failure crash limit (QueueWriter.java:20).
 MAX_CONSECUTIVE_FAILURES = 10
+
+#: (batch_id, attempt, ok) entries JdbcVehiclesSink keeps: the newest ones,
+#: so a long-running app holds a fixed-size history
+ATTEMPTS_HISTORY = 1024
 
 
 @dataclass
@@ -70,7 +75,7 @@ class JdbcVehiclesSink:
     single_transaction: bool = False
     max_retries: int = MAX_CONSECUTIVE_FAILURES
     retry_backoff_s: float = 1.0
-    attempts_log: list = field(default_factory=list)
+    attempts_log: deque = field(default_factory=lambda: deque(maxlen=ATTEMPTS_HISTORY))
 
     def jdbc_properties(self) -> dict:
         props = dict(self.properties)

@@ -1,52 +1,21 @@
-"""Wire-format decode: message bytes/strings -> HFP_RAW_SCHEMA structs.
+"""JVM-side protobuf decode: ``from_protobuf`` (spark-protobuf module)
+against the compiled descriptor — the deploy-time twin of
+``sources.protowire.decode_hfp_wire``.
 
-The reference consumes protobuf `Hfp.Data` messages (Topic + Payload,
-MessageProcessor.java:118-119, QueueWriter.java:60,97). On Spark the
-decode is a column expression:
-
-- JSON path (fully implemented): `from_json` against the canonical nested
-  schema — used by tests/dev and any JSON-carrying topic.
-- Protobuf path: `from_protobuf` (spark-protobuf module) against the
-  compiled descriptor. The connector jar + descriptor set are deployment
-  artifacts not present in this container, so the function raises a clear
-  error until they are provided; the downstream plan (transform/split) is
-  identical either way, which is what the tests pin.
+The reference consumes protobuf ``Hfp.Data`` messages (Topic + Payload,
+MessageProcessor.java:118-119, QueueWriter.java:60,97). The descriptor set
+ships with the package (resources/hfp.desc); the connector jar is a
+deployment artifact not present in this container, so
+``decode_hfp_protobuf`` raises a clear error until it is provided. Every
+in-repo ingest path (file stream, backfill, pulsar/kafka frames) decodes
+through ``decode_hfp_wire``; the downstream plan (transform/split) is
+identical either way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
-
-
-def decode_hfp_json(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Decode a JSON string/bytes column into (schema_valid, topic,
-    payload). Undecodable messages yield a NULL struct -> schema_valid
-    false -> dead-letter (F1 semantics for malformed wire data)."""
-    parsed = F.from_json(F.col(value_col).cast("string"), HFP_RAW_SCHEMA)
-    # PERMISSIVE from_json yields an all-NULL struct for garbage input, so
-    # validity requires the mandatory sub-structs to be present, plus any
-    # explicit schema_valid=false flag (MessageProcessor.java:118)
-    ok = (
-        parsed.isNotNull()
-        & parsed["topic"].isNotNull()
-        & parsed["payload"].isNotNull()
-        & F.coalesce(parsed["schema_valid"], F.lit(True))
-    )
-    return df.select(
-        ok.alias("schema_valid"),
-        parsed["topic"].alias("topic"),
-        parsed["payload"].alias("payload"),
-    )
-
-
-def encode_hfp_json(df: DataFrame) -> DataFrame:
-    """Inverse (test fixtures / replay): nested rows -> JSON strings."""
-    return df.select(
-        F.to_json(F.struct("schema_valid", "topic", "payload")).alias("value")
-    )
 
 
 def has_spark_protobuf(spark) -> bool:
@@ -88,8 +57,8 @@ def decode_hfp_protobuf(
             "protobuf decode needs the org.apache.spark:spark-protobuf jar "
             "on the classpath (--packages org.apache.spark:spark-protobuf_"
             "2.13:<spark version>). The descriptor set is bundled "
-            "(resources/hfp.desc); the protowire/JSON paths exercise the "
-            "identical downstream plan without the jar."
+            "(resources/hfp.desc); sources.protowire.decode_hfp_wire "
+            "feeds the identical downstream plan without the jar."
         )
     from pyspark.sql.protobuf.functions import from_protobuf
 

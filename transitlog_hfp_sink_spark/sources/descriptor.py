@@ -34,8 +34,8 @@ from __future__ import annotations
 
 import os
 
+from transitlog_hfp_sink_spark.schema import ENUM_DOMAINS
 from transitlog_hfp_sink_spark.sources.protowire import (
-    _ENUMS,
     _tag,
     _varint,
     _WT_LEN,
@@ -127,6 +127,6 @@ def build_file_descriptor_set() -> bytes:
     file_body += _ld(4, _message("Topic", TOPIC_FIELDS))
     file_body += _ld(4, _message("Payload", PAYLOAD_FIELDS))
     for key, ename in _ENUM_TYPE_NAMES.items():
-        file_body += _ld(5, _enum(ename, _ENUMS[key]))  # enum_type = 5
+        file_body += _ld(5, _enum(ename, ENUM_DOMAINS[key]))  # enum_type = 5
     file_body += _s(12, "proto2")  # syntax = 12
     return _ld(1, file_body)  # FileDescriptorSet.file = 1

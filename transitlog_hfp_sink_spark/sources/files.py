@@ -1,14 +1,13 @@
-"""File sources: batch/streaming readers over parquet/json fixtures, plus
-the driver testdata tables.
+"""Sources: the HFP wire-frame stream, plus the testdata tables (TESTDATA.md).
 
 The production source in the reference is a Pulsar consumer
 (MessageProcessor.java:102, environment.conf:4-11). On Spark that is a
 one-line swap: ``spark.readStream.format("pulsar")`` (StreamNative
-connector) or ``format("kafka")`` — see ``read_hfp_stream(fmt=...)``. The
-connector jars aren't in this container, so tests use the file stream,
-which exercises the identical downstream plan (decode -> transform ->
-foreachBatch); offsets/acks live in the checkpoint either way (SURVEY §2.4
-M3 mapping).
+connector) or ``format("kafka")`` — see ``read_hfp_stream(fmt=...)``.
+Without the connector jars the file stream carries the same wire frames
+(``value binary`` parquet), so every format runs the identical plan
+(decode -> transform -> foreachBatch); offsets/acks live in the checkpoint
+either way (SURVEY §2.4 M3 mapping).
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
 from transitlog_hfp_sink_spark.sources.protowire import decode_hfp_wire
 
 TABLES = (
@@ -111,39 +109,40 @@ def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_table(spark, sf_dir, t) for t in TABLES}
 
 
+#: per connector: the option naming the topic, and the per-trigger rate
+#: limit that replaces the reference's queue-full drop (SURVEY §2.2 F2)
+_TOPIC_OPTION = {"pulsar": "topic", "kafka": "subscribe"}
+_RATE_OPTION = {"pulsar": "maxEntriesPerTrigger", "kafka": "maxOffsetsPerTrigger"}
+
+
 def read_hfp_stream(
     spark: SparkSession,
     path_or_topic: str,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
+    max_rows_per_trigger: int | None = None,
     **options: str,
 ) -> DataFrame:
-    """Streaming read.
+    """Streaming read of ``Hfp.Data`` wire frames, decoded by
+    ``decode_hfp_wire`` into HFP_RAW_SCHEMA-shaped rows, so every source
+    feeds ``hfp_split`` the same way.
 
-    fmt="parquet"/"json": file-drop stream over fixtures (tests/dev).
+    fmt="parquet": file-drop stream of ``value binary`` parquet files, one
+      message per row; ``max_files_per_trigger`` bounds each batch.
     fmt="pulsar": StreamNative connector — options should carry
-      ``service.url``, ``topic`` (=hfp-data), ``subscriptionName``
-      (environment.conf:4-11). Rate limiting via maxEntriesPerTrigger
-      replaces the reference's queue-full drop (SURVEY §2.2 F2).
-    fmt="kafka": options carry kafka.bootstrap.servers / subscribe;
-      maxOffsetsPerTrigger is the rate limit.
-
-    Connector frames carry each ``Hfp.Data`` message in their binary
-    ``value`` column; they come back decoded by ``decode_hfp_wire`` as
-    HFP_RAW_SCHEMA rows, so every source feeds ``hfp_split`` the same way.
+      ``service.url`` and ``subscriptionName`` (environment.conf:4-11);
+      ``max_rows_per_trigger`` becomes ``maxEntriesPerTrigger``.
+    fmt="kafka": options carry ``kafka.bootstrap.servers``;
+      ``max_rows_per_trigger`` becomes ``maxOffsetsPerTrigger``.
     """
-    if fmt in ("parquet", "json"):
-        reader = spark.readStream.schema(HFP_RAW_SCHEMA).format(fmt)
+    if fmt == "parquet":
+        reader = spark.readStream.schema("value binary").format(fmt)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        return reader.load(path_or_topic)
-    reader = spark.readStream.format(fmt)
-    if fmt == "pulsar":
-        reader = reader.option("topic", path_or_topic)
-    elif fmt == "kafka":
-        reader = reader.option("subscribe", path_or_topic)
+    else:
+        reader = spark.readStream.format(fmt).option(_TOPIC_OPTION[fmt], path_or_topic)
+        if max_rows_per_trigger:
+            reader = reader.option(_RATE_OPTION[fmt], str(max_rows_per_trigger))
     for k, v in options.items():
         reader = reader.option(k, v)
-    return decode_hfp_wire(reader.load())
+    return decode_hfp_wire(reader.load(path_or_topic if fmt == "parquet" else None))

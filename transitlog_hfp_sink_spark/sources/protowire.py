@@ -1,6 +1,6 @@
-"""Pure-Python protobuf WIRE-FORMAT codec for ``Hfp.Data`` — the binary
-decode leg of the reference's input path, runnable without the
-spark-protobuf jar or a compiled descriptor.
+"""Pure-Python protobuf WIRE-FORMAT codec for ``Hfp.Data`` — the decode leg
+of every ingest path (file stream, backfill, pulsar/kafka frames), runnable
+without the spark-protobuf jar or a compiled descriptor.
 
 The reference's wire contract is ``Hfp.Data.parseFrom(message.getData())``
 (/root/reference/src/main/java/fi/hsl/transitlog/hfp/MessageProcessor.java:119)
@@ -14,17 +14,16 @@ safe-parse strings (dir/tst/drst/oday/start/start_time — see
 schema.HFP_PAYLOAD_SCHEMA) are length-delimited strings on the wire, so
 every malformed-value path survives the roundtrip.
 
-Deployment note: with the spark-protobuf connector jar + a compiled
-descriptor available, ``sources.decode.decode_hfp_protobuf`` is the
-preferred (JVM-side) path. This module is the dependency-free twin that
-proves the binary semantics end-to-end: encode -> decode is bitwise
-lossless (doubles travel as IEEE-754 fixed64), so the roundtrip query
-shares the full 40-column oracle of hfp_vehicles_transform.
+Deployment note: with the spark-protobuf connector jar available,
+``sources.decode.decode_hfp_protobuf`` decodes the same bytes JVM-side
+against the bundled descriptor. Encode -> decode here is bitwise lossless
+(doubles travel as IEEE-754 fixed64), so the roundtrip query shares the
+full 40-column oracle of hfp_vehicles_transform.
 
-Scale shape: both codec directions run inside ``mapInPandas`` — Arrow
-batches in, Arrow batches out, no shuffle, no driver involvement; the
-per-row Python work is the same cost class as the multimodal decode stubs
-(operators/multimodal.py) and parallelizes per input partition.
+Scale shape: both codec directions are ``mapInArrow`` kernels — Arrow
+batches in, Arrow batches out, reading and writing the nested
+``topic``/``payload`` struct columns directly; no shuffle, all work on
+the executors, parallel per input partition.
 """
 
 from __future__ import annotations
@@ -32,34 +31,26 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
+from transitlog_hfp_sink_spark.schema import (  # noqa: F401 - re-exported
+    ENUM_DOMAINS,
+    EVENT_TYPE_ENUM,
+    JOURNEY_TYPE_ENUM,
+    LOC_ENUM,
+    TEMPORAL_TYPE_ENUM,
+    TRANSPORT_MODE_ENUM,
+)
 
 # ---------------------------------------------------------------------------
 # Message layout (field number, engine column, kind)
-# kinds: i32/i64 varint ints, str, dbl fixed64, enum:<name> varint
+# kinds: i32/i64 varint ints, str, dbl fixed64, enum:<domain> varint, where
+# <domain> keys schema.ENUM_DOMAINS
 # ---------------------------------------------------------------------------
-
-JOURNEY_TYPE_ENUM = ("journey", "deadrun", "signoff")
-TEMPORAL_TYPE_ENUM = ("ongoing", "upcoming")
-EVENT_TYPE_ENUM = (
-    "VP", "DUE", "ARR", "ARS", "PDE", "DEP", "PAS", "WAIT", "DOO",
-    "DOC", "TLR", "TLA", "DA", "DOUT", "BA", "BOUT", "VJA", "VJOUT",
-)
-TRANSPORT_MODE_ENUM = ("bus", "train", "tram", "metro", "ferry")
-LOC_ENUM = ("GPS", "ODO", "MAN", "NA")
-
-_ENUMS = {
-    "journey_type": JOURNEY_TYPE_ENUM,
-    "temporal_type": TEMPORAL_TYPE_ENUM,
-    "event_type": EVENT_TYPE_ENUM,
-    "transport_mode": TRANSPORT_MODE_ENUM,
-    "loc": LOC_ENUM,
-}
 
 TOPIC_FIELDS: tuple[tuple[int, str, str], ...] = (
     (2, "received_at", "i64"),
@@ -137,6 +128,8 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         pos += 1
         result |= (b & 0x7F) << shift
         if not b & 0x80:
+            if result >> 64:
+                raise ValueError("varint overflows 64 bits")
             if result >> 63:  # sign-extend 64-bit two's complement
                 result -= 1 << 64
             return result, pos
@@ -164,14 +157,30 @@ def _encode_msg(fields, row: dict) -> bytes:
             b = str(v).encode("utf-8")
             out += _tag(num, _WT_LEN) + _varint(len(b)) + b
         else:  # enum
-            domain = _ENUMS[kind.split(":", 1)[1]]
+            domain = ENUM_DOMAINS[kind.split(":", 1)[1]]
             out += _tag(num, _WT_VARINT) + _varint(domain.index(v))
     return bytes(out)
 
 
-def _decode_msg(fields, buf: bytes) -> dict:
-    by_num = {num: (name, kind) for num, name, kind in fields}
-    row: dict = {name: None for _, name, _ in fields}
+def _layout(fields) -> dict[int, tuple]:
+    """field number -> (slot, name, kind, expected wire type, enum domain),
+    built once per message type so decoding does one dict probe per field."""
+    out = {}
+    for slot, (num, name, kind) in enumerate(fields):
+        wt = _WT_LEN if kind == "str" else _WT_FIXED64 if kind == "dbl" else _WT_VARINT
+        out[num] = (slot, name, kind, wt, ENUM_DOMAINS.get(kind.partition(":")[2]))
+    return out
+
+
+_TOPIC_LAYOUT = _layout(TOPIC_FIELDS)
+_PAYLOAD_LAYOUT = _layout(PAYLOAD_FIELDS)
+_I32_MIN, _I32_MAX = -(1 << 31), (1 << 31) - 1
+
+
+def _decode_msg(layout: dict[int, tuple], buf: bytes) -> list:
+    """One Topic/Payload sub-message -> its values in field-table order
+    (None where a field is absent)."""
+    vals: list = [None] * len(layout)
     pos = 0
     while pos < len(buf):
         key, pos = _read_varint(buf, pos)
@@ -191,20 +200,15 @@ def _decode_msg(fields, buf: bytes) -> dict:
             pos += ln
         else:
             raise ValueError(f"unsupported wire type {wt}")
-        if num == 1:
-            continue  # schema_version
-        if num not in by_num:
-            continue  # unknown field: skipped (proto forward-compat)
-        name, kind = by_num[num]
+        field = layout.get(num)
+        if field is None:
+            continue  # schema_version (1) or unknown field (proto forward-compat)
+        slot, name, kind, expected_wt, domain = field
         # a known field carried on the WRONG wire type is a corrupt/
         # mis-schema'd message and must surface as ValueError so the
-        # mapInPandas dead-letter catch in decode_hfp_wire converts it to
-        # a schema_valid=false row — before round 8 a string field sent
-        # as varint hit bytes-vs-int type errors that CRASHED the task
-        # instead of dead-lettering (fuzz-tested in tests/test_protowire.py)
-        expected_wt = (
-            _WT_LEN if kind == "str" else _WT_FIXED64 if kind == "dbl" else _WT_VARINT
-        )
+        # dead-letter catch in decode_hfp_wire converts it to a
+        # schema_valid=false row instead of a task-killing TypeError
+        # (fuzz-tested in tests/test_protowire.py)
         if wt != expected_wt:
             raise ValueError(
                 f"wire type {wt} != {expected_wt} expected for field "
@@ -212,15 +216,14 @@ def _decode_msg(fields, buf: bytes) -> dict:
             )
         if kind == "str":
             val = val.decode("utf-8")
-        elif kind.startswith("enum:"):
-            domain = _ENUMS[kind.split(":", 1)[1]]
+        elif domain is not None:
             if not 0 <= val < len(domain):
                 raise ValueError(f"enum {name} out of range: {val}")
             val = domain[val]
-        elif kind in ("i32", "i64"):
-            val = int(val)
-        row[name] = val
-    return row
+        elif kind == "i32" and not _I32_MIN <= val <= _I32_MAX:
+            raise ValueError(f"int32 {name} out of range: {val}")
+        vals[slot] = val
+    return vals
 
 
 def encode_data(topic_row: dict, payload_row: dict) -> bytes:
@@ -233,7 +236,8 @@ def encode_data(topic_row: dict, payload_row: dict) -> bytes:
     )
 
 
-def decode_data(buf: bytes) -> tuple[dict, dict]:
+def _decode_values(buf: bytes) -> tuple[list, list]:
+    """Data envelope -> (topic values, payload values) in field-table order."""
     topic = payload = None
     pos = 0
     while pos < len(buf):
@@ -248,9 +252,9 @@ def decode_data(buf: bytes) -> tuple[dict, dict]:
             sub = buf[pos : pos + ln]
             pos += ln
             if num == 2:
-                topic = _decode_msg(TOPIC_FIELDS, sub)
+                topic = _decode_msg(_TOPIC_LAYOUT, sub)
             elif num == 3:
-                payload = _decode_msg(PAYLOAD_FIELDS, sub)
+                payload = _decode_msg(_PAYLOAD_LAYOUT, sub)
         else:
             raise ValueError(f"unsupported wire type {wt} in Data")
     if topic is None or payload is None:
@@ -258,79 +262,105 @@ def decode_data(buf: bytes) -> tuple[dict, dict]:
     return topic, payload
 
 
-#: bytes that fail decode_data — stands in for a message whose Pulsar
-#: properties carry the wrong protobuf schema (MessageProcessor.java:118)
-INVALID_WIRE_BYTES = b"\xff\xff\xff"
-
 _T_COLS = [name for _, name, _ in TOPIC_FIELDS]
 _P_COLS = [name for _, name, _ in PAYLOAD_FIELDS]
 
 
+def decode_data(buf: bytes) -> tuple[dict, dict]:
+    t, p = _decode_values(buf)
+    return dict(zip(_T_COLS, t)), dict(zip(_P_COLS, p))
+
+
+#: bytes that fail decode_data — stands in for a message whose Pulsar
+#: properties carry the wrong protobuf schema (MessageProcessor.java:118)
+INVALID_WIRE_BYTES = b"\xff\xff\xff"
+
+#: what decode_data raises on malformed bytes; decode_hfp_wire turns each
+#: into a schema_valid=false row
+_MALFORMED = (ValueError, struct.error, UnicodeDecodeError)
+
+
 # ---------------------------------------------------------------------------
-# DataFrame surface (mapInPandas both directions)
+# DataFrame surface (mapInArrow both directions)
 # ---------------------------------------------------------------------------
+
+_SPARK_TYPES = {
+    "i32": T.IntegerType(), "i64": T.LongType(), "dbl": T.DoubleType(), "str": T.StringType(),
+}
+
+
+def _struct_type(fields) -> T.StructType:
+    return T.StructType([
+        T.StructField(name, _SPARK_TYPES.get(kind, T.StringType()), True)
+        for _, name, kind in fields
+    ])
+
+
+#: decode_hfp_wire's output: HFP_RAW_SCHEMA's columns and types, with
+#: non-null topic/payload structs whose fields are all nullable (a
+#: dead-letter row carries all-NULL structs)
+_WIRE_ROWS_SCHEMA = T.StructType([
+    T.StructField("schema_valid", T.BooleanType(), True),
+    T.StructField("topic", _struct_type(TOPIC_FIELDS), False),
+    T.StructField("payload", _struct_type(PAYLOAD_FIELDS), False),
+])
+_WIRE_ROWS_ARROW = to_arrow_schema(_WIRE_ROWS_SCHEMA)
+
+
+def _struct_array(rows: list, typ: pa.StructType) -> pa.StructArray:
+    cols = list(zip(*rows)) if rows else [()] * typ.num_fields
+    return pa.StructArray.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, typ)], fields=list(typ)
+    )
+
+
+def _decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    dead = ([None] * len(TOPIC_FIELDS), [None] * len(PAYLOAD_FIELDS))
+    t_type = _WIRE_ROWS_ARROW.field("topic").type
+    p_type = _WIRE_ROWS_ARROW.field("payload").type
+    for batch in batches:
+        ok, topics, payloads = [], [], []
+        for buf in batch.column(0).to_pylist():
+            decoded = None
+            if buf is not None:  # a NULL frame (e.g. a Kafka tombstone) is dead
+                try:
+                    decoded = _decode_values(buf)
+                except _MALFORMED:
+                    pass
+            ok.append(decoded is not None)
+            t, p = decoded or dead
+            topics.append(t)
+            payloads.append(p)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ok, type=pa.bool_()),
+                _struct_array(topics, t_type),
+                _struct_array(payloads, p_type),
+            ],
+            schema=_WIRE_ROWS_ARROW,
+        )
+
+
+def _encode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        vals = [
+            encode_data(t or {}, p or {}) if ok else INVALID_WIRE_BYTES
+            for ok, t, p in zip(*(c.to_pylist() for c in batch.columns))
+        ]
+        yield pa.RecordBatch.from_arrays([pa.array(vals, type=pa.binary())], ["value"])
+
 
 def encode_hfp_wire(df: DataFrame) -> DataFrame:
     """(schema_valid, topic, payload) -> one binary ``value`` column.
     Rows with schema_valid=false are emitted as undecodable bytes, so the
     decoder exercises the invalid-schema dead-letter path end to end."""
-    flat = df.select(
-        "schema_valid",
-        *[F.col(f"topic.{c}").alias(f"t_{c}") for c in _T_COLS],
-        *[F.col(f"payload.{c}").alias(f"p_{c}") for c in _P_COLS],
+    return df.select("schema_valid", "topic", "payload").mapInArrow(
+        _encode_batches, "value binary"
     )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vals = []
-            for rec in pdf.to_dict("records"):
-                if not rec["schema_valid"]:
-                    vals.append(INVALID_WIRE_BYTES)
-                    continue
-                t = {c: rec[f"t_{c}"] for c in _T_COLS}
-                p = {c: rec[f"p_{c}"] for c in _P_COLS}
-                vals.append(encode_data(t, p))
-            yield pd.DataFrame({"value": vals})
-
-    return flat.mapInPandas(_enc, schema="value binary")
-
-
-_DECODED_SCHEMA = ", ".join(
-    ["schema_valid boolean"]
-    + [f"t_{f.name} {f.dataType.simpleString()}" for f in HFP_RAW_SCHEMA["topic"].dataType.fields]
-    + [f"p_{f.name} {f.dataType.simpleString()}" for f in HFP_RAW_SCHEMA["payload"].dataType.fields]
-)
 
 
 def decode_hfp_wire(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Binary protobuf ``value`` column -> HFP_RAW_SCHEMA rows.
-    Undecodable messages yield schema_valid=false with NULL structs (the
-    F1 dead-letter contract, same as decode_hfp_json on garbage)."""
-    src = df.select(F.col(value_col).alias("value"))
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for buf in pdf["value"]:
-                rec = {"schema_valid": False}
-                rec.update({f"t_{c}": None for c in _T_COLS})
-                rec.update({f"p_{c}": None for c in _P_COLS})
-                try:
-                    t, p = decode_data(bytes(buf))
-                except (ValueError, struct.error, UnicodeDecodeError):
-                    rows.append(rec)
-                    continue
-                rec["schema_valid"] = True
-                rec.update({f"t_{c}": t[c] for c in _T_COLS})
-                rec.update({f"p_{c}": p[c] for c in _P_COLS})
-                rows.append(rec)
-            out = pd.DataFrame(rows)
-            # object dtype keeps ints unmangled (no float64 NaN coercion)
-            yield out.astype(object).where(pd.notna(out), None)
-
-    flat = src.mapInPandas(_dec, schema=_DECODED_SCHEMA)
-    return flat.select(
-        "schema_valid",
-        F.struct(*[F.col(f"t_{c}").alias(c) for c in _T_COLS]).alias("topic"),
-        F.struct(*[F.col(f"p_{c}").alias(c) for c in _P_COLS]).alias("payload"),
-    )
+    """Binary protobuf ``value`` column -> (schema_valid, topic, payload)
+    rows shaped like HFP_RAW_SCHEMA. Undecodable or NULL frames yield
+    schema_valid=false with all-NULL structs (the F1 dead-letter contract)."""
+    return df.select(F.col(value_col)).mapInArrow(_decode_batches, _WIRE_ROWS_SCHEMA)

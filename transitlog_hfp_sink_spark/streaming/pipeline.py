@@ -9,8 +9,9 @@ Reference runtime-loop parity (SURVEY §2.4):
 - M6 msgRateIn / insert-rate logs (:82-89, 149-158)       -> StreamingQueryListener (built-in rates)
 - M7 graceful shutdown (:145-153)                         -> query.stop() via context manager
 - F2 queue-full drop (MessageProcessor.java:103-110)      -> NOT replicated: source rate limiting
-  (maxFilesPerTrigger / maxOffsetsPerTrigger) bounds memory without losing data. Documented
-  deviation per SURVEY §7 hard part 5.
+  (config.max_rows_per_trigger -> maxEntriesPerTrigger / maxOffsetsPerTrigger, or
+  maxFilesPerTrigger for the file stream; see sources.read_hfp_stream) bounds memory without
+  losing data. Documented deviation per SURVEY §7 hard part 5.
 
 Beyond parity, the pipeline exposes watermarking + the natural-key dedup so
 at-least-once redelivery becomes effectively-once into the analytics tier —
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
+from transitlog_hfp_sink_spark.schema import VEHICLES_DEDUP_KEY
 from transitlog_hfp_sink_spark.transform import hfp_split
 
 logger = logging.getLogger(__name__)
@@ -97,9 +99,7 @@ class HfpPipeline:
         try:
             valid, dead = hfp_split(raw_df)
             if self.dedup:
-                valid = valid.dropDuplicates(
-                    ["unique_vehicle_id", "tst", "event_type", "journey_type"]
-                )
+                valid = valid.dropDuplicates(list(VEHICLES_DEDUP_KEY))
             self.sink(valid, batch_id)
             if self.dead_letter_path is not None:
                 dead.write.mode("append").parquet(self.dead_letter_path)

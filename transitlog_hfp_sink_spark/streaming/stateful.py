@@ -19,7 +19,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -123,107 +122,4 @@ def streaming_sessionize(
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (the successor stateful API)
-# ---------------------------------------------------------------------------
-
-def streaming_sessionize_tws(
-    stream: DataFrame,
-    gap_seconds: int = 1800,
-    flush_final: bool = True,
-) -> DataFrame:
-    """streaming_sessionize on ``transformWithStateInPandas`` — Spark 4's
-    successor to applyInPandasWithState (typed per-key state objects,
-    timers, TTL). Same semantics as the applyInPandasWithState path, same
-    flush_final caveat; equality of the two engines over identical input
-    is asserted in tests/test_streaming.py.
-
-    Requires the RocksDB state store provider (transformWithState's
-    backing store) — streaming/pipeline-level conf, set by the caller or
-    test fixture:
-      spark.sql.streaming.stateStore.providerClass=
-        org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    and the `google.protobuf` Python package (the API's state-protocol
-    wire format). Environments without it (like this sandbox) raise
-    ImportError here — a documented capability gate, same as
-    sources/decode.decode_hfp_protobuf; the applyInPandasWithState path
-    above is the dependency-free engine of record.
-    """
-    import importlib.util
-
-    try:  # pragma: no cover - environment probe
-        has_pb = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_pb = False
-    if not has_pb:
-        raise ImportError(
-            "transformWithStateInPandas needs the google.protobuf package "
-            "(state-protocol codec); use streaming_sessionize instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionizeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState("open_session", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            user_id = key[0]
-            if self._open.exists():
-                sid, start_us, last_us, n, vsum = self._open.get()
-            else:
-                sid, start_us, last_us, n, vsum = 0, None, None, 0, 0.0
-            out: list[tuple] = []
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                whole = pd.concat(chunks, ignore_index=True).sort_values("ts")
-                for ts, value in zip(whole["ts"], whole["value"]):
-                    ts_us = int(ts.value // 1000)
-                    if start_us is None:
-                        sid, start_us, last_us, n, vsum = (
-                            sid + 1, ts_us, ts_us, 1, float(value),
-                        )
-                    elif (ts_us // 1_000_000) - (last_us // 1_000_000) > gap_seconds:
-                        out.append((user_id, sid, start_us, last_us, n, vsum))
-                        sid, start_us, last_us, n, vsum = (
-                            sid + 1, ts_us, ts_us, 1, float(value),
-                        )
-                    else:
-                        last_us, n, vsum = ts_us, n + 1, vsum + float(value)
-            if flush_final and start_us is not None:
-                out.append((user_id, sid, start_us, last_us, n, vsum))
-                self._open.clear()
-            elif start_us is not None:
-                self._open.update((sid, start_us, last_us, n, vsum))
-            else:
-                # no open session (empty micro-batch slice or pre-first
-                # event): writing a (0, None, ...) placeholder would pin
-                # never-cleaned NULL-timestamp state for the key
-                # (round-2 ADVICE) — leave state absent instead
-                self._open.clear()
-            if out:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [r[0] for r in out],
-                        "session_id": [r[1] for r in out],
-                        "session_start": [pd.Timestamp(r[2], unit="us") for r in out],
-                        "session_end": [pd.Timestamp(r[3], unit="us") for r in out],
-                        "n_events": [r[4] for r in out],
-                        "total_value": [r[5] for r in out],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return stream.select("user_id", "ts", "value").groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionizeProcessor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )

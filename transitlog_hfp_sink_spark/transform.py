@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.functions.timeparse import safe_parse_time
+from transitlog_hfp_sink_spark.schema import VEHICLES_DEDUP_KEY
 
 # try_* expressions keep null-on-malformed semantics under ANSI mode
 # (Spark 4 defaults spark.sql.ansi.enabled=true, where plain CAST throws).
@@ -147,4 +148,4 @@ def dedup_vehicles(df: DataFrame) -> DataFrame:
     offers exact dedup on the natural key; in streaming this pairs with a
     watermark to bound state.
     """
-    return df.dropDuplicates(["unique_vehicle_id", "tst", "event_type", "journey_type"])
+    return df.dropDuplicates(list(VEHICLES_DEDUP_KEY))
