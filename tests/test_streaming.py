@@ -109,6 +109,48 @@ def test_stream_checkpoint_recovery_no_reprocess(spark, tmp_path, drops_dir):
     assert dedup_vehicles(spark.read.parquet(out)).count() == expected
 
 
+def test_pipeline_builds_split_plan_once_per_query(spark, tmp_path, drops_dir, monkeypatch):
+    """The validate/flatten/dead-letter plan is built once when the query
+    starts, not once per micro-batch: building it costs ~2k py4j calls."""
+    from transitlog_hfp_sink_spark import transform
+
+    calls = []
+    flatten = transform.hfp_flatten
+
+    def counting_flatten(*args, **kwargs):
+        calls.append(1)
+        return flatten(*args, **kwargs)
+
+    monkeypatch.setattr(transform, "hfp_flatten", counting_flatten)
+    out, dead = str(tmp_path / "out"), str(tmp_path / "dead")
+    pipe = HfpPipeline(
+        sink=lambda df, bid: df.write.mode("append").parquet(out),
+        checkpoint=str(tmp_path / "ckpt"), trigger_seconds=0.1, dead_letter_path=dead,
+    )
+    q = pipe.start(read_hfp_stream(spark, drops_dir, max_files_per_trigger=2))
+    try:
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) >= 3
+    assert len(calls) == 1
+    n_in = sum(p["numInputRows"] for p in batches)
+    assert spark.read.parquet(out).count() + spark.read.parquet(dead).count() == n_in
+
+
+def test_local_master_lists_files_on_driver(spark):
+    """Local masters list a file stream batch's files on the driver; any
+    other master keeps Spark's distributed-listing default."""
+    from transitlog_hfp_sink_spark.session import LISTING_THRESHOLD_CONF, master_conf
+
+    assert int(spark.conf.get(LISTING_THRESHOLD_CONF)) >= 2**31 - 1
+    for master in ("local", "local[4]", "local[*]", "local[2,3]"):
+        assert master_conf(master) == {LISTING_THRESHOLD_CONF: str(2**31 - 1)}, master
+    for master in ("spark://host:7077", "yarn", "k8s://https://h:443", "local-cluster[2,1,1024]"):
+        assert master_conf(master) == {}, master
+
+
 def test_transform_throughput_meets_reference_ceiling(spark):
     """BASELINE.md: the reference's design ceiling is 250k msg/s. The
     engine's transform must sustain that on this box (steady state)."""

@@ -173,3 +173,41 @@ def test_transform_is_codegen_only(vehicles):
     plan = vehicles._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_split_output_is_frozen(spark, raw_df):
+    """hfp_split's two sides, schema (nullability included) and rows, as
+    the two-branch split produced them on the fixtures. Rows are compared
+    by the program's order-independent digest over their string forms."""
+    from pyspark.sql import types as T
+
+    from transitlog_hfp_sink_spark.queries.power import agg_digest_spark
+
+    def digest(df):
+        cols = [F.col(c).cast("string").alias(c) for c in df.columns]
+        return tuple(agg_digest_spark(df.select(cols), [(c, "string") for c in df.columns])
+                     .first())
+
+    valid, dead = hfp_split(raw_df)
+    assert valid.columns == VEHICLES_COLUMNS
+    assert [f.name for f in valid.schema.fields if not f.nullable] == [
+        "received_at", "topic_prefix", "topic_version", "journey_type", "is_ongoing",
+        "owner_operator_id", "vehicle_number", "unique_vehicle_id", "veh", "tsi",
+    ]
+    assert dead.schema == T.StructType([
+        T.StructField("reject_reason", T.StringType(), False),
+        T.StructField("raw", T.StringType(), True),
+    ])
+    assert digest(valid) == (598, 1260582148109, 1255668635632)
+    assert digest(dead) == (12, 35376032838, 32048924820)
+    by_reason = dict(dead.groupBy("reject_reason").count().collect())
+    assert by_reason == {"invalid_protobuf_schema": 11, "unparseable_tst": 1}
+
+    # a NULL schema flag (the decoder's column is nullable) is a wrong schema
+    nullable = T.StructType([T.StructField("schema_valid", T.BooleanType(), True),
+                             *HFP_RAW_SCHEMA.fields[1:]])
+    rows = make_hfp_rows(5)
+    rows[0]["schema_valid"] = None
+    valid, dead = hfp_split(spark.createDataFrame(rows, schema=nullable))
+    assert [r["reject_reason"] for r in dead.collect()] == ["invalid_protobuf_schema"]
+    assert valid.count() == len(rows) - 1

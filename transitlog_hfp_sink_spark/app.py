@@ -231,7 +231,8 @@ def _backfill(argv: list[str]) -> int:
     spark = build_session(app_name="hfp-backfill")
     try:
         # the dead-letter write and the upsert each read the decoded rows
-        # (the dead side twice); pin them so the Python decode runs once
+        # (each side is one filter over hfp_tag); pin them so the Python
+        # decode runs once
         raw = decode_hfp_wire(spark.read.parquet(args.source)).persist()
         valid, dead = hfp_split(raw)
         if args.dead_letter:
@@ -732,34 +733,24 @@ def main(argv: list[str] | None = None) -> int:
                     args.source, args.sink, cfg.dump_interval_s)
         if args.max_runtime_s:
             # bounded run: the deadline is a CEILING, not a sleep — once
-            # the stream has processed data and then gone idle for a few
-            # consecutive batches (a drained file source), exit early.
-            # Round-6 hardening: the fixed-sleep form made the subprocess
-            # e2e time out under host load (45 s of JVM start + first
-            # trigger wasn't enough) while wasting 30+ idle seconds on a
-            # quiet machine; drain detection gives both paths the right
-            # duration and lets callers set generous ceilings.
+            # the stream has processed data and then found none for a few
+            # consecutive polls (a drained file source), exit early. A
+            # stateless query runs no micro-batch without new data, so the
+            # batch id stops advancing; the drain shows in query.status.
             import time as _time
 
             deadline = _time.time() + args.max_runtime_s
-            saw_data, idle_batches, last_bid = False, 0, -1
+            saw_data, idle_polls = False, 0
             while _time.time() < deadline:
                 if query.awaitTermination(1.0):
                     break
-                p = query.lastProgress
-                if p is None:
-                    continue
-                bid = p.get("batchId", -1)
-                if bid == last_bid:
-                    continue  # count DISTINCT batches, not poll ticks
-                last_bid = bid
-                if p.get("numInputRows", 0) > 0:
-                    saw_data, idle_batches = True, 0
-                elif saw_data:
-                    idle_batches += 1
-                    if idle_batches >= 3:
-                        logger.info("bounded run drained; stopping early")
-                        break
+                st = query.status
+                saw_data = saw_data or (query.lastProgress or {}).get("numInputRows", 0) > 0
+                idle = not st["isDataAvailable"] and not st["isTriggerActive"]
+                idle_polls = idle_polls + 1 if saw_data and idle else 0
+                if idle_polls >= 3:
+                    logger.info("bounded run drained; stopping early")
+                    break
             query.stop()
         else:
             query.awaitTermination()

@@ -9,8 +9,26 @@ timestamps, and a shuffle-partition count sized for the workload.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: Above this many paths Spark lists files with a distributed job
+#: (spark.sql.sources.parallelPartitionDiscovery.threshold, default 32).
+#: On a local master that job runs the same listing code in the same JVM
+#: and adds a job's scheduling cost: on local[4] a file stream batch of 50
+#: files paid 0.25-0.6 s in getBatch for it. Local masters list on the driver.
+LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def master_conf(master: str) -> dict[str, str]:
+    """Settings that depend on the master: driver-side file listing on
+    ``local``/``local[...]``; cluster masters (``local-cluster`` included)
+    keep Spark's default."""
+    if _LOCAL_MASTER.fullmatch(master):
+        return {LISTING_THRESHOLD_CONF: str(2**31 - 1)}
+    return {}
 
 
 def build_session(
@@ -47,6 +65,6 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**master_conf(master), **(extra_conf or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,4 +1,12 @@
-"""The HFP streaming pipeline: readStream -> hfp_transform -> foreachBatch.
+"""The HFP streaming pipeline: readStream -> hfp_tag -> foreachBatch.
+
+The validate/flatten/dead-letter split is one tagging projection
+(``transform.hfp_tag``) that ``HfpPipeline.start`` applies to the stream
+once per query, as Structured Streaming defines a query once and re-plans
+each epoch from that one logical plan. Each micro-batch then only pins the
+tagged rows and takes two filters over them (``transform.split_tagged``):
+the valid rows to the sink, the rejects to the dead-letter path. No
+batch rebuilds the 40-column plan on the Python side.
 
 Reference runtime-loop parity (SURVEY §2.4):
 - M1 1 s dump interval (MessageProcessor.java:48-49)      -> trigger(processingTime="1 second")
@@ -30,7 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from transitlog_hfp_sink_spark.schema import VEHICLES_DEDUP_KEY
-from transitlog_hfp_sink_spark.transform import hfp_split
+from transitlog_hfp_sink_spark.transform import hfp_tag, split_tagged
 
 logger = logging.getLogger(__name__)
 
@@ -92,23 +100,23 @@ class HfpPipeline:
     dedup: bool = False  # natural-key dedup per micro-batch; for cross-batch
     # dedup use dropDuplicatesWithinWatermark on the transformed stream
 
-    def _foreach_batch(self, raw_df: DataFrame, batch_id: int) -> None:
-        # the valid write + two dead-letter branches would each rescan the
-        # micro-batch source (3x read amplification) — pin it once
-        raw_df.persist()
+    def _foreach_batch(self, tagged_df: DataFrame, batch_id: int) -> None:
+        # the valid write and the dead-letter write each read the batch;
+        # pin the tagged rows so the source and decode run once
+        tagged_df.persist()
         try:
-            valid, dead = hfp_split(raw_df)
+            valid, dead = split_tagged(tagged_df)
             if self.dedup:
                 valid = valid.dropDuplicates(list(VEHICLES_DEDUP_KEY))
             self.sink(valid, batch_id)
             if self.dead_letter_path is not None:
                 dead.write.mode("append").parquet(self.dead_letter_path)
         finally:
-            raw_df.unpersist()
+            tagged_df.unpersist()
 
     def start(self, raw_stream: DataFrame) -> StreamingQuery:
         return (
-            raw_stream.writeStream.foreachBatch(self._foreach_batch)
+            hfp_tag(raw_stream).writeStream.foreachBatch(self._foreach_batch)
             .option("checkpointLocation", self.checkpoint)
             .trigger(processingTime=f"{self.trigger_seconds} seconds")
             .start()

@@ -12,7 +12,8 @@ Spark columns are natively nullable, so that apparatus is zero code here.
 The safeParseX family (dir/drst/oday/start/journey_start_time) maps to
 try_cast / regexp-guarded expressions: malformed -> NULL, never throw.
 
-Validity split (SURVEY §2.2):
+Validity split (SURVEY §2.2), one tagging projection (``hfp_tag``) with
+the two sides as filters over it (``split_tagged``):
 - F1 schema filter: messages not declaring protobuf schema HfpData are
   dropped with a warn (MessageProcessor.java:118,125-127) — here routed to
   a dead-letter DataFrame instead of only logging.
@@ -33,12 +34,18 @@ from transitlog_hfp_sink_spark.schema import VEHICLES_DEDUP_KEY
 # try_* expressions keep null-on-malformed semantics under ANSI mode
 # (Spark 4 defaults spark.sql.ansi.enabled=true, where plain CAST throws).
 
+#: the dead-letter reasons, in the order they are checked
+REJECT_SCHEMA, REJECT_TST = "invalid_protobuf_schema", "unparseable_tst"
+#: the tag columns hfp_tag appends after the 40 vehicles columns
+TAG_COLUMNS = ("reject_reason", "raw")
 
-def hfp_flatten(df: DataFrame) -> DataFrame:
+
+def hfp_flatten(df: DataFrame, *keep: str) -> DataFrame:
     """The P1-P40 projection (QueueWriter.java:57-137), no filtering.
 
     Input: HFP_RAW_SCHEMA-shaped (nested topic/payload). Output: the flat
-    40-column vehicles schema, column order per init.sql:26-68.
+    40-column vehicles schema, column order per init.sql:26-68, then the
+    input columns named in ``keep``.
     """
     t = lambda f: F.col(f"topic.{f}")  # noqa: E731
     p = lambda f: F.col(f"payload.{f}")  # noqa: E731
@@ -93,6 +100,7 @@ def hfp_flatten(df: DataFrame) -> DataFrame:
         p("stop").cast("int").alias("stop"),  # P38
         p("route").alias("route"),  # P39
         p("occu").cast("int").alias("occu"),  # P40
+        *keep,
     )
 
 
@@ -100,11 +108,43 @@ def hfp_transform(df: DataFrame) -> DataFrame:
     """F1 schema filter + P1-P40 flatten + F3 tst invariant: the valid side.
 
     The one-call equivalent of the reference's handleMessage + write path
-    for well-formed data. Filters push down to the scan (schema_valid is a
-    top-level column) and the projection prunes the nested struct reads.
+    for well-formed data.
     """
     valid, _ = hfp_split(df)
     return valid
+
+
+def hfp_tag(df: DataFrame) -> DataFrame:
+    """The whole split as one projection: the 40 vehicles columns, then
+    ``reject_reason`` (NULL on valid rows; F1 is checked before F3) and
+    ``raw`` (the input row as JSON, set only on rejected rows).
+
+    A stream applies it once per query (``HfpPipeline.start``); each
+    micro-batch then only takes the two filters of ``split_tagged``. The
+    flatten also runs on rejected rows (``decode_hfp_wire`` leaves their
+    fields NULL).
+    """
+    # a NULL schema flag counts as a wrong schema: every row lands on one side
+    schema_ok = F.coalesce(F.col("schema_valid"), F.lit(False))
+    reason = F.when(~schema_ok, F.lit(REJECT_SCHEMA)).when(
+        F.try_to_timestamp(F.col("payload.tst")).isNull(), F.lit(REJECT_TST)
+    )
+    raw = F.when(reason.isNotNull(), F.to_json(F.struct("topic", "payload")))
+    tagged = df.select("topic", "payload", reason.alias("reject_reason"), raw.alias("raw"))
+    return hfp_flatten(tagged, *TAG_COLUMNS)
+
+
+def split_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid, dead_letter) filters over an ``hfp_tag`` output."""
+    reason = F.col("reject_reason")
+    valid = tagged.where(reason.isNull()).drop(*TAG_COLUMNS)
+    dead = tagged.where(reason.isNotNull()).select(
+        # the filter keeps only non-NULL reasons; coalesce states that in
+        # the schema, so the dead-letter reject_reason stays NOT NULL
+        F.coalesce(reason, F.lit(REJECT_SCHEMA)).alias("reject_reason"),
+        "raw",
+    )
+    return valid, dead
 
 
 def hfp_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -114,22 +154,7 @@ def hfp_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     sink can count/inspect (replacing the reference's warn-log at
     MessageProcessor.java:125-127 and crash at QueueWriter.java:106).
     """
-    flat = hfp_flatten(df.where(F.col("schema_valid")))
-    valid = flat.where(F.col("tst").isNotNull())
-
-    bad_schema = df.where(~F.col("schema_valid")).select(
-        F.lit("invalid_protobuf_schema").alias("reject_reason"),
-        F.to_json(F.struct("topic", "payload")).alias("raw"),
-    )
-    bad_tst = (
-        df.where(F.col("schema_valid"))
-        .where(F.try_to_timestamp(F.col("payload.tst")).isNull())
-        .select(
-            F.lit("unparseable_tst").alias("reject_reason"),
-            F.to_json(F.struct("topic", "payload")).alias("raw"),
-        )
-    )
-    return valid, bad_schema.unionByName(bad_tst)
+    return split_tagged(hfp_tag(df))
 
 
 def with_partition_columns(df: DataFrame) -> DataFrame:
