@@ -113,3 +113,35 @@ def test_no_version_col_is_deterministic(spark, tmp_path):
         key_cols=["k", "day"], partition_cols=["day"],
     )
     assert first == _snap(spark, path2)
+
+
+def test_semi_join_branch_matches_listed_branch(spark, tmp_path, monkeypatch):
+    """Above MAX_TOUCHED_LIST touched partitions the store is restricted
+    by a broadcast semi-join instead of a listed partition filter; both
+    give the same store. Both match a NULL partition value null-safely:
+    the untouched row already in that partition must survive its
+    overwrite."""
+    from transitlog_hfp_sink_spark.sinks import merge
+
+    seed = [(1, "d1", "a", 1), (2, "d1", "b", 1), (3, "d2", "c", 1), (8, None, "m", 1)]
+    batch = [(1, "d1", "a2", 2), (5, "d1", "e", 1), (7, None, "o", 1)]
+
+    def run(name):
+        path = str(tmp_path / name)
+        for rows in (seed, batch):
+            upsert_partitioned(
+                spark, path, _rows(spark, rows),
+                key_cols=["k", "day"], partition_cols=["day"], version_col="ver",
+            )
+        return _snap(spark, path)
+
+    listed = run("listed")
+    monkeypatch.setattr(merge, "MAX_TOUCHED_LIST", 0)
+    assert run("semi") == listed == {
+        (1, "d1"): ("a2", 2),
+        (2, "d1"): ("b", 1),
+        (3, "d2"): ("c", 1),
+        (5, "d1"): ("e", 1),
+        (7, None): ("o", 1),
+        (8, None): ("m", 1),
+    }

@@ -4,6 +4,7 @@ that forces partial-merge rather than blind append)."""
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.sources.files import read_table
@@ -144,19 +145,146 @@ def test_replay_after_refresh_does_not_double_count(spark, sf_dir, tmp_path):
     ev.unpersist()
 
 
+def _parquet_files_by_dir(root):
+    """{partition dir: sorted parquet file names} under a local store."""
+    import os
+
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        names = sorted(f for f in files if f.endswith(".parquet"))
+        if names:
+            out[os.path.relpath(dirpath, root)] = names
+    return out
+
+
 def test_conf_restored_after_write(spark, sf_dir, tmp_path):
-    """__call__ must not leak partitionOverwriteMode=dynamic session-wide."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    ev = read_table(spark, sf_dir, "events").limit(100)
+    """The read-modify-overwrite writers (rollup sink, upsert,
+    compaction) replace only the partitions they touch without relying
+    on the session-wide partitionOverwriteMode: under "static" they
+    still leave every other partition's files alone, and they leave the
+    conf at "static"."""
+    from transitlog_hfp_sink_spark.sinks.compact import compact_partitioned
+    from transitlog_hfp_sink_spark.sinks.merge import upsert_partitioned
+
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(conf_key, "static")
+    try:
+        # rollup sink: batch 1 revisits only the first hour of batch 0
+        ev = read_table(spark, sf_dir, "events").orderBy("ts").limit(30).cache()
+        first_hour = ev.select(
+            F.date_format(F.min(F.date_trunc("hour", "ts")), "yyyy-MM-dd HH:00:00")
+        ).first()[0]
+        b1 = ev.where(
+            F.date_trunc("hour", "ts") == F.lit(first_hour).cast("timestamp")
+        )
+        root = str(tmp_path / "rollup")
+        sink = ContinuousRollupSink(
+            spark=spark, path=root,
+            ts_col="ts", value_col="value", dims=["event_type"],
+        )
+        sink(ev, 0)
+        before = _parquet_files_by_dir(root)
+        sink(b1, 1)
+        after = _parquet_files_by_dir(root)
+        assert before.keys() == after.keys() and len(before) > 1
+        assert [d for d in before if before[d] != after[d]] == [
+            f"bucket_date={first_hour[:10]}/bucket_hour={int(first_hour[11:13])}"
+        ]
+        assert sink.read().agg(F.sum("n")).first()[0] == 30 + b1.count()
+        assert spark.conf.get(conf_key) == "static"
+        ev.unpersist()
+
+        # upsert: only the updated key's partition is rewritten
+        schema = "k long, day string, v string"
+        store = str(tmp_path / "tbl")
+        seed = [(1, "d1", "a"), (2, "d2", "b"), (3, "d3", "c")]
+        upsert_partitioned(
+            spark, store, spark.createDataFrame(seed, schema),
+            key_cols=["k"], partition_cols=["day"],
+        )
+        before = _parquet_files_by_dir(store)
+        upsert_partitioned(
+            spark, store, spark.createDataFrame([(2, "d2", "b2")], schema),
+            key_cols=["k"], partition_cols=["day"],
+        )
+        after = _parquet_files_by_dir(store)
+        assert before.keys() == after.keys()
+        assert [d for d in before if before[d] != after[d]] == ["day=d2"]
+        assert sorted(
+            (r["k"], r["day"], r["v"]) for r in spark.read.parquet(store).collect()
+        ) == [(1, "d1", "a"), (2, "d2", "b2"), (3, "d3", "c")]
+        assert spark.conf.get(conf_key) == "static"
+
+        # compaction: only the fragmented partition is rewritten
+        frag = str(tmp_path / "frag")
+        for i in range(3):
+            spark.range(i * 10, (i + 1) * 10).select(
+                "id", F.lit(0).alias("p")
+            ).repartition(2).write.mode("append").partitionBy("p").parquet(frag)
+        spark.range(100, 110).select("id", F.lit(1).alias("p")).coalesce(
+            1
+        ).write.mode("append").partitionBy("p").parquet(frag)
+        before = _parquet_files_by_dir(frag)
+        report = compact_partitioned(spark, frag, ["p"], max_files_per_partition=2)
+        assert report["partitions_compacted"] == 1
+        after = _parquet_files_by_dir(frag)
+        assert after["p=1"] == before["p=1"]
+        assert len(after["p=0"]) == 1
+        assert spark.read.parquet(frag).count() == 40
+        assert spark.conf.get(conf_key) == "static"
+    finally:
+        spark.conf.unset(conf_key)
+
+
+def test_rollup_sink_on_uri_store(spark, sf_dir, tmp_path):
+    """A scheme-qualified store URI: the batch high-water mark goes
+    through the store's Hadoop FileSystem like the data does, so both
+    batches commit, the mark advances and a replay is skipped."""
+    ev = read_table(spark, sf_dir, "events").orderBy("ts").limit(30).cache()
     sink = ContinuousRollupSink(
-        spark=spark, path=str(tmp_path / "rollup"),
+        spark=spark, path=f"file://{tmp_path}/rollup",
         ts_col="ts", value_col="value", dims=["event_type"],
     )
-    sink(ev, 0)
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-    )
-    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    sink(ev.where(F.col("event_id") % 2 == 0), 0)
+    sink(ev.where(F.col("event_id") % 2 == 1), 1)
+    sink(ev, 1)  # checkpoint replay of the last batch id
+    assert sink.read().agg(F.sum("n")).first()[0] == ev.count()
+    assert sink._last_committed() == 1
+    ev.unpersist()
+
+
+@pytest.mark.parametrize("granularity", ["hour", "date"])
+def test_semi_join_branch_matches_listed_branch(
+    spark, sf_dir, tmp_path, monkeypatch, granularity
+):
+    """Above MAX_TOUCHED_LIST touched partitions the store is restricted
+    by a broadcast semi-join instead of a listed partition filter; both
+    must merge the same partials, at both granularities (a date-dir
+    overwrite must read every hour of a touched date)."""
+    from transitlog_hfp_sink_spark.sinks import merge
+
+    ev = read_table(spark, sf_dir, "events").orderBy("ts").limit(30).cache()
+    b0 = ev.where(F.col("event_id") % 2 == 0)
+    b1 = ev.where(F.col("event_id") % 3 == 0)  # revisits some of b0's hours
+
+    def run(name):
+        sink = ContinuousRollupSink(
+            spark=spark, path=str(tmp_path / name),
+            ts_col="ts", value_col="value", dims=["event_type"],
+            granularity=granularity,
+        )
+        sink(b0, 0)
+        sink(b1, 1)
+        return {
+            (str(r["bucket"]), r["event_type"]): (r["n"], round(r["sum_value"], 6))
+            for r in sink.read().collect()
+        }
+
+    listed = run("listed")
+    monkeypatch.setattr(merge, "MAX_TOUCHED_LIST", 0)
+    assert run("semi") == listed
+    assert sum(n for n, _ in listed.values()) == b0.count() + b1.count()
+    ev.unpersist()
 
 
 def test_refresh_range_repairs_damage_and_drops_stale(spark, sf_dir, tmp_path):

@@ -8,12 +8,11 @@ contracts directly so a change here fails fast and close to the cause.
 import pytest
 from pyspark.sql import functions as F
 
+from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json
 from transitlog_hfp_sink_spark.operators.serving import (
     INDEX_EPOCH_FILE,
     SERVING_META_VERSION,
     check_index_epoch,
-    fs_read_json,
-    fs_write_json,
     list_partition_keys,
     pruned_partition_read,
     read_epoch_marker,
@@ -247,6 +246,7 @@ def test_ivfpq_kill_between_data_and_meta_serves_loud(
     re-publish killed (a) before the marker write and (b) between the
     marker and the meta publish must leave a layout that SERVES LOUD —
     never silently mixes new codes with the stale meta."""
+    from transitlog_hfp_sink_spark import fs
     from transitlog_hfp_sink_spark.operators import serving
     from transitlog_hfp_sink_spark.operators.similarity import (
         ivfpq_serve,
@@ -277,14 +277,14 @@ def test_ivfpq_kill_between_data_and_meta_serves_loud(
 
     # (b) kill BETWEEN marker and meta: marker carries the new epoch,
     # meta still the old one
-    real_write = serving.fs_write_json
+    real_write = fs.fs_write_json
 
     def meta_boom(spark_, path, obj):
         if path.endswith(INDEX_EPOCH_FILE):
             return real_write(spark_, path, obj)
         raise RuntimeError("killed before meta")
 
-    monkeypatch.setattr(serving, "fs_write_json", meta_boom)
+    monkeypatch.setattr(fs, "fs_write_json", meta_boom)
     with pytest.raises(RuntimeError, match="killed before meta"):
         write_ivfpq_index(emb.limit(50), out, n_lists=8, m=4, k=16)
     monkeypatch.undo()

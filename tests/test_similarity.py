@@ -1162,10 +1162,8 @@ def test_ivf_serve_defaults_vec_col_from_meta(spark, sf_dir, tmp_path):
     to the meta-recorded name (mirroring ivfpq_serve)."""
     from pyspark.sql import functions as F
 
-    from transitlog_hfp_sink_spark.operators.serving import (
-        fs_write_json,
-        list_partition_keys,
-    )
+    from transitlog_hfp_sink_spark.fs import fs_write_json
+    from transitlog_hfp_sink_spark.operators.serving import list_partition_keys
     from transitlog_hfp_sink_spark.operators.similarity import (
         ivf_assign,
         ivf_centroids,

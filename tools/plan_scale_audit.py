@@ -79,9 +79,9 @@ def serve_fingerprints(spark, sf_dir: str, tag: str) -> dict[str, dict]:
         bm25_serve,
         write_postings_index,
     )
+    from transitlog_hfp_sink_spark.fs import fs_write_json
     from transitlog_hfp_sink_spark.operators.serving import (
         SERVING_META_VERSION,
-        fs_write_json,
         list_partition_keys,
         write_epoch_marker,
     )

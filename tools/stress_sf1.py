@@ -1152,10 +1152,8 @@ def run_ivfpqserve10(spark) -> None:
     import random
     import tempfile
 
-    from transitlog_hfp_sink_spark.operators.serving import (
-        fs_write_json,
-        list_partition_keys,
-    )
+    from transitlog_hfp_sink_spark.fs import fs_write_json
+    from transitlog_hfp_sink_spark.operators.serving import list_partition_keys
     from transitlog_hfp_sink_spark.operators.similarity import (
         ivfpq_serve,
         ivfpq_topk,
@@ -1253,10 +1251,8 @@ def run_ivfpqserve11(spark) -> None:
     import random
     import tempfile
 
-    from transitlog_hfp_sink_spark.operators.serving import (
-        fs_write_json,
-        list_partition_keys,
-    )
+    from transitlog_hfp_sink_spark.fs import fs_write_json
+    from transitlog_hfp_sink_spark.operators.serving import list_partition_keys
     from transitlog_hfp_sink_spark.operators.similarity import ivfpq_serve
 
     n, m, kk, dim, nprobe = 1_000_000, 8, 16, 64, 4

@@ -425,10 +425,9 @@ def _build_index(argv: list[str]) -> int:
             # last-write-wins, same contract as the ivf/postings kinds.
             from pyspark.sql import functions as F
 
+            from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json
             from transitlog_hfp_sink_spark.operators.serving import (
                 SERVING_META_VERSION,
-                fs_read_json,
-                fs_write_json,
                 list_partition_keys,
                 write_epoch_marker,
             )
@@ -509,10 +508,9 @@ def _build_index(argv: list[str]) -> int:
                 "n_lists": n_lists,
             }
         else:
+            from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json
             from transitlog_hfp_sink_spark.operators.serving import (
                 SERVING_META_VERSION,
-                fs_read_json,
-                fs_write_json,
                 list_partition_keys,
                 write_epoch_marker,
             )

@@ -9,15 +9,11 @@ MANIFEST, so serving constructs the probed paths directly with zero
 per-query discovery. These helpers are the ONE implementation of that
 contract, so the scale-safe shape cannot drift between index kinds:
 
-- fs_write_json / fs_read_json: meta IO through the Hadoop FileSystem
-  API, so build and serve work on ANY Spark-reachable filesystem
-  (``file:``, ``hdfs:``, ``s3a:``, ``abfs:``, ``gs:``). The builtin
-  ``open()`` these replaced worked only on POSIX paths — the one seam
-  between the serving design and an object-store deployment (the codes/
-  postings data and the directory listings already went through Spark /
-  the Hadoop FS; VERDICT r9 what's-wrong #1). Since round 11
-  fs_write_json publishes ATOMICALLY (temp + rename — VERDICT r10 #1):
-  a reader never observes a truncated meta.
+- meta IO goes through fs.py's fs_write_json / fs_read_json and
+  listings through fs.hadoop_fs, so build and serve work on ANY
+  Spark-reachable filesystem (``file:``, ``hdfs:``, ``s3a:``, ``abfs:``,
+  ``gs:``), and a meta is published atomically (temp + rename): a
+  reader never observes a truncated one.
 - write_epoch_marker / check_index_epoch: the publish-consistency gate
   (round 11, VERDICT r10 #1). Build/update flows write DATA first and
   meta second, so a crash between the two used to leave new codes under
@@ -50,11 +46,17 @@ surface a 100 TB training-data pipeline needs.
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from transitlog_hfp_sink_spark.fs import (
+    fs_read_json,
+    fs_write_json,
+    hadoop_fs,
+    path_exists,
+)
 
 #: current serving-meta layout version. Bump on any meta shape change so
 #: an old engine refuses a new layout loudly (validate_meta) instead of
@@ -66,62 +68,6 @@ SERVING_META_VERSION = 1
 #: so Spark's file index ignores it next to the parquet partitions (the
 #: same convention as _SUCCESS).
 INDEX_EPOCH_FILE = "_index_epoch"
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for `path` under the session's Hadoop conf —
-    the scheme in the path (or fs.defaultFS when bare) picks the
-    implementation, so the same code serves file:/hdfs:/s3a:/abfs:/gs:."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, p
-
-
-def fs_write_json(spark: SparkSession, path: str, obj) -> None:
-    """Write `obj` as one UTF-8 JSON document at `path` via the Hadoop
-    FS API (overwrite). Single file, not a Spark job: index metas are a
-    few KB of quantizers/manifest and must stay readable as one document
-    (`centroids.json`, `ivfpq_meta.json`) for layout compatibility.
-
-    ATOMIC publish (round 11, VERDICT r10 #1): the document is written
-    to ``<path>.__tmp__`` in full and RENAMED onto the final path — the
-    stage-then-promote discipline the export sinks already follow — so
-    a reader never observes a half-written meta. HDFS-style rename
-    refuses an existing destination, so the old document is deleted
-    first; the residual crash window (between delete and rename) leaves
-    NO meta, which serves as a loud read failure — never a silent
-    truncated parse. A crash mid-temp-write leaves the OLD meta intact
-    plus a stray temp file the next publish overwrites."""
-    fs, p = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".__tmp__")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        raise IOError(
-            f"atomic meta publish failed: rename {path}.__tmp__ -> {path}"
-        )
-
-
-def fs_read_json(spark: SparkSession, path: str) -> dict:
-    """Read one JSON document written by fs_write_json (or any
-    pre-round-10 builtin-open() layout — the local FS is just another
-    Hadoop filesystem)."""
-    fs, p = _hadoop_fs(spark, path)
-    inp = fs.open(p)
-    try:
-        # FSDataInputStream is a java.io.InputStream; readAllBytes()
-        # (Java 9+) avoids a commons-io dependency for a few-KB meta
-        raw = bytes(inp.readAllBytes())
-    finally:
-        inp.close()
-    return json.loads(raw.decode("utf-8"))
 
 
 def write_epoch_marker(spark: SparkSession, data_dir: str) -> str:
@@ -211,7 +157,7 @@ def list_partition_keys(
     meta as the manifest; serving then never lists unmatched directories
     (the round-9 BM25 probe attributed its residual r~2.8 growth to
     per-query discovery of 2,560 directories)."""
-    fs, p = _hadoop_fs(spark, root)
+    fs, p = hadoop_fs(spark, root)
     prefix = f"{part_col}="
     return sorted(
         int(st.getPath().getName().split("=", 1)[1])
@@ -289,13 +235,8 @@ def pruned_partition_read(
     if discovery == "root":
         return spark.read.parquet(root).where(F.col(part_col).isin(hit))
     if not from_listing:
-        jvm = spark.sparkContext._jvm
-        fs, _ = _hadoop_fs(spark, root)
         gone = [
-            k for k in hit
-            if not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{root}/{part_col}={k}")
-            )
+            k for k in hit if not path_exists(spark, f"{root}/{part_col}={k}")
         ]
         if gone:
             raise RuntimeError(

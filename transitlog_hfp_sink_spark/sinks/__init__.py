@@ -1,5 +1,6 @@
 """Sinks: partitioned parquet (analytics tier), JDBC (reference parity),
-keyed upsert (merge.py), deterministic JSONL training export (export.py),
+keyed upsert and the shared partition-overwrite step (merge.py),
+deterministic JSONL training export (export.py),
 WebDataset-style tar-shard multimodal export (wds.py)."""
 
 from transitlog_hfp_sink_spark.sinks.parquet import write_vehicles_parquet

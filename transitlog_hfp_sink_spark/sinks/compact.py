@@ -13,10 +13,9 @@ Shape:
   (driver-side metadata only, no data read);
 - rewrite ONLY partitions whose file count exceeds the threshold, each
   coalesced to ceil(partition_bytes / target_file_bytes) files;
-- commit with dynamic-partition-overwrite: file replacement defers to
-  job commit, so a mid-job crash leaves the old files in place
-  (write-then-swap, the crash-safety pattern shared with
-  sinks/merge.py and streaming/rollup_sink.py);
+- commit each through sinks/merge.py's overwrite_partitions (dynamic
+  partition overwrite): file replacement defers to job commit, so a
+  mid-job crash leaves the old files in place;
 - untouched partitions are never listed by the writer, never rewritten,
   never at risk.
 
@@ -33,7 +32,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transitlog_hfp_sink_spark.fs import path_exists
+from transitlog_hfp_sink_spark.fs import hadoop_fs, path_exists
+from transitlog_hfp_sink_spark.sinks.merge import overwrite_partitions
 
 #: 128 MiB — the classic HDFS-block-aligned parquet target
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -43,9 +43,7 @@ def partition_file_stats(spark: SparkSession, path: str) -> list[dict]:
     """One row per leaf partition directory: {partition (relative dir
     string, '' for unpartitioned), n_files, bytes}. Driver-side Hadoop FS
     listing — metadata only, works on file://, hdfs://, s3a://."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_fs(spark, path)
     root = fs.getFileStatus(jpath).getPath().toString()
     stats: dict[str, dict] = {}
     it = fs.listFiles(jpath, True)
@@ -103,27 +101,13 @@ def compact_partitioned(
     if not oversized:
         return report
     table = spark.read.parquet(path)
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    try:
-        # self-read-then-overwrite is safe ONLY under dynamic mode
-        # (deletion defers to commit) — the merge.py / rollup_sink rule
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        for s in oversized:
-            n_files = max(1, math.ceil(s["bytes"] / target_file_bytes))
-            report["files_after_target"] += n_files
-            part_df: DataFrame = (
-                table.where(_partition_predicate(s["partition"]))
-                if s["partition"]
-                else table
-            )
-            (
-                part_df.repartition(n_files)
-                .write.mode("overwrite")
-                .partitionBy(*partition_cols)
-                .parquet(path)
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    for s in oversized:
+        n_files = max(1, math.ceil(s["bytes"] / target_file_bytes))
+        report["files_after_target"] += n_files
+        part_df: DataFrame = (
+            table.where(_partition_predicate(s["partition"]))
+            if s["partition"]
+            else table
+        )
+        overwrite_partitions(part_df.repartition(n_files), path, partition_cols)
     return report

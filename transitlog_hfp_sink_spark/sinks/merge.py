@@ -1,32 +1,94 @@
-"""Keyed upsert (MERGE) into a partitioned parquet table.
+"""Keyed upsert (MERGE) into a partitioned parquet table, and the one
+read-modify-overwrite step every partitioned parquet store shares.
+
+The step is two helpers, used by upsert_partitioned here, by the
+continuous aggregate (streaming/rollup_sink.py) and by compaction
+(sinks/compact.py):
+
+- restrict_to_touched: the store's rows in ONLY the partitions an
+  update touches (a driver-side partition filter up to
+  MAX_TOUCHED_LIST partitions, a broadcast semi-join above it);
+- overwrite_partitions: dynamic-partition-overwrite of exactly the
+  partitions the output holds, as a writer option (the session's
+  ``partitionOverwriteMode`` is never touched). File deletion defers to
+  job commit, so the write may read its own target, and a mid-job crash
+  leaves the old data in place (write-then-swap, never update-in-place).
 
 The reference sink is INSERT-only (QueueWriter.java:36-48) — correction
 feeds, late re-sends, and dimension maintenance all need upsert
 semantics downstream (TimescaleDB users reach for INSERT ... ON CONFLICT
-DO UPDATE). Plain parquet has no MERGE, so this implements the
-engine-side equivalent with the partition-targeted read-modify-overwrite
-pattern proven by streaming/rollup_sink.py:
-
-1. partition-prune the store to ONLY the partitions the update batch
-   touches (driver list under a bound, broadcast semi-join above it);
-2. anti-join those partitions' rows against the update keys (drop the
-   old versions), union the new rows;
-3. dynamic-partition-overwrite exactly the touched partitions — file
-   deletion defers to job commit, so a mid-job crash leaves the old
-   data in place (write-then-swap, never update-in-place).
-
-Cost per call is O(touched partitions), not O(table) — the property
-that keeps upserts usable when the table is 100 TB. Last-writer-wins
-within a batch is resolved deterministically (greatest version column,
-then arbitrary-but-stable key order).
+DO UPDATE). Plain parquet has no MERGE, so upsert_partitioned restricts
+the store to the touched partitions, anti-joins their rows against the
+update keys (drops the old versions), unions the new rows and overwrites
+the touched partitions. Cost per call is O(touched partitions), not
+O(table) — the property that keeps upserts usable when the table is
+100 TB. Last-writer-wins within a batch is resolved deterministically
+(greatest version column, then arbitrary-but-stable key order).
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.fs import path_exists
+
+#: above this many touched partitions the restrict step stops collecting
+#: them to the driver and semi-joins instead (a replay of a huge
+#: historical batch must not blow the driver or the filter expression)
+MAX_TOUCHED_LIST = 4096
+
+
+def restrict_to_touched(
+    store: DataFrame, touched: DataFrame, partition_cols: list[str]
+) -> DataFrame | None:
+    """The rows of `store` in the partitions `touched` names, or None
+    when `touched` is empty.
+
+    touched: the distinct `partition_cols` values of the update, one row
+    per partition. Up to MAX_TOUCHED_LIST of them become a partition
+    filter, so the scan lists only the touched directories; above that
+    a broadcast left-semi join on the partition columns restricts the
+    store. Matching is null-safe: a NULL partition value is a partition
+    like any other, and its old rows must reach the merge or the
+    overwrite drops them."""
+    rows = touched.limit(MAX_TOUCHED_LIST + 1).collect()
+    if not rows:
+        return None
+    if len(rows) > MAX_TOUCHED_LIST:
+        keys = touched.select(
+            *[F.col(c).alias(f"__t_{c}") for c in partition_cols]
+        )
+        on = reduce(
+            and_,
+            [F.col(c).eqNullSafe(F.col(f"__t_{c}")) for c in partition_cols],
+        )
+        return store.join(F.broadcast(keys), on=on, how="left_semi")
+    conds = [
+        reduce(and_, [F.col(c).eqNullSafe(F.lit(r[c])) for c in partition_cols])
+        for r in rows
+    ]
+    # OR them as a balanced tree: a left-deep chain of a few hundred
+    # clauses overflows the JVM stack when Spark converts the Column
+    while len(conds) > 1:
+        conds = [reduce(or_, conds[i : i + 2]) for i in range(0, len(conds), 2)]
+    return store.where(conds[0])
+
+
+def overwrite_partitions(
+    df: DataFrame, path: str, partition_cols: list[str]
+) -> None:
+    """Replace the partitions `df` holds under `path`; every other
+    partition stays as it is."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def upsert_partitioned(
@@ -36,7 +98,6 @@ def upsert_partitioned(
     key_cols: list[str],
     partition_cols: list[str],
     version_col: str | None = None,
-    max_touched_list: int = 4096,
     count_rows: bool = False,
 ) -> dict | None:
     """MERGE `updates` into the parquet table at `path`.
@@ -76,8 +137,7 @@ def upsert_partitioned(
     fresh = fresh.persist()
     try:
         return _upsert_body(
-            spark, path, fresh, key_cols, partition_cols,
-            max_touched_list, count_rows,
+            spark, path, fresh, key_cols, partition_cols, count_rows
         )
     finally:
         fresh.unpersist()
@@ -89,33 +149,19 @@ def _upsert_body(
     fresh: DataFrame,
     key_cols: list[str],
     partition_cols: list[str],
-    max_touched_list: int,
     count_rows: bool,
 ) -> dict | None:
     stats = {"rows_upserted": fresh.count()} if count_rows else None
     if not path_exists(spark, path):
         fresh.write.partitionBy(*partition_cols).parquet(path)
         return stats
-    store = spark.read.parquet(path)
-    touched_df = fresh.select(*partition_cols).distinct()
-    touched = touched_df.limit(max_touched_list + 1).collect()
-    if not touched:
-        # empty update batch: nothing to merge — and proceeding would
-        # build a WHERE over zero partition clauses (round-2 ADVICE)
-        return {"rows_upserted": 0} if count_rows else None
-    if len(touched) > max_touched_list:
-        existing = store.join(
-            F.broadcast(touched_df), on=partition_cols, how="left_semi"
-        )
-    else:
-        cond = None
-        for row in touched:
-            clause = None
-            for c in partition_cols:
-                eq = F.col(c) == row[c]
-                clause = eq if clause is None else (clause & eq)
-            cond = clause if cond is None else (cond | clause)
-        existing = store.where(cond)
+    existing = restrict_to_touched(
+        spark.read.parquet(path),
+        fresh.select(*partition_cols).distinct(),
+        partition_cols,
+    )
+    if existing is None:
+        return stats  # empty update batch: nothing to merge
     # NULL-SAFE key matching (NULLS NOT DISTINCT, matching
     # transform.dedup_vehicles' dropDuplicates semantics): a plain
     # equi-anti-join never matches a NULL key component, so a store row
@@ -125,20 +171,11 @@ def _upsert_body(
     fresh_keys = fresh.select(
         *[F.col(c).alias(f"__k_{c}") for c in key_cols]
     ).distinct()
-    null_safe = None
-    for c in key_cols:
-        e = F.col(c).eqNullSafe(F.col(f"__k_{c}"))
-        null_safe = e if null_safe is None else (null_safe & e)
-    kept = existing.join(F.broadcast(fresh_keys), on=null_safe, how="left_anti")
-    merged = kept.select(*fresh.columns).unionByName(fresh)
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
+    null_safe = reduce(
+        and_, [F.col(c).eqNullSafe(F.col(f"__k_{c}")) for c in key_cols]
     )
-    try:
-        # the self-read-then-overwrite is safe ONLY under dynamic mode
-        # (deletion defers to commit); see rollup_sink for the same rule
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    kept = existing.join(F.broadcast(fresh_keys), on=null_safe, how="left_anti")
+    overwrite_partitions(
+        kept.select(*fresh.columns).unionByName(fresh), path, partition_cols
+    )
     return stats

@@ -29,15 +29,15 @@ def write_vehicles_parquet(
     df: DataFrame,
     path: str,
     mode: str = "append",
-    files_per_hour: int = 1,
 ) -> None:
-    """Write the flat vehicles DataFrame as partitioned parquet.
+    """Write the flat vehicles DataFrame as partitioned parquet, one
+    write task per call, so each hour partition gains at most one file.
 
-    files_per_hour bounds small-file proliferation (the 1 s micro-batch
-    cadence of the reference would otherwise create 3600 files/hour); at
-    cluster scale raise it so each file stays ~128 MB-1 GB.
+    The file count per partition is compaction's job
+    (sinks/compact.compact_partitioned rewrites the hours the 1 s
+    micro-batches fragmented into ~128 MB files), not the writer's.
     """
     out = with_partition_columns(df)
-    out = out.repartition(files_per_hour, *PARTITION_COLUMNS, "unique_vehicle_id")
+    out = out.repartition(1, *PARTITION_COLUMNS, "unique_vehicle_id")
     out = out.sortWithinPartitions(*PARTITION_COLUMNS, "unique_vehicle_id", "tst")
     out.write.mode(mode).partitionBy(*PARTITION_COLUMNS).parquet(path)

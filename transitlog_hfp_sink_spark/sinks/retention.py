@@ -36,7 +36,7 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from transitlog_hfp_sink_spark.fs import path_exists
+from transitlog_hfp_sink_spark.fs import hadoop_fs, path_exists
 from transitlog_hfp_sink_spark.sinks.compact import partition_file_stats
 
 
@@ -117,9 +117,6 @@ def drop_partitions_older_than(
     if not path_exists(spark, path):
         return report
     stats = partition_file_stats(spark, path)
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     for s in stats:
         part = s["partition"]
         if not part:
@@ -133,7 +130,8 @@ def drop_partitions_older_than(
             # delete() reports failure as FALSE, not an exception; a
             # partition that would not delete must not be reported
             # expired (auditing/compliance).
-            ok = fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{part}"), True)
+            fs, part_path = hadoop_fs(spark, f"{path}/{part}")
+            ok = fs.delete(part_path, True)
             if not ok:
                 report["failed"].append(part)
                 continue

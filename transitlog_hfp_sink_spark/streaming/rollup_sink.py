@@ -5,9 +5,12 @@ over the vehicles hypertable; Timescale materializes them incrementally).
 Spark-native formulation: a foreachBatch sink that keeps a partitioned
 parquet aggregate table current by re-aggregating ONLY the hour partitions
 the incoming micro-batch touches — merge existing partials with the
-batch's partials and overwrite just those partitions (dynamic partition
-overwrite). Cost per trigger is O(touched hours), not O(history), which is
-what makes the aggregate maintainable when history is 100 TB.
+batch's partials and overwrite just those partitions, through
+sinks/merge.py's restrict_to_touched and overwrite_partitions. Cost per
+trigger is O(touched hours), not O(history), which is what makes the
+aggregate maintainable when history is 100 TB. The batch high-water mark
+(`_last_committed_batch`, a JSON integer) goes through fs.py's atomic
+fs_write_json, so the sink works on any Hadoop-supported store URI.
 
 Aggregates maintained as mergeable partials: count + decimal sum (avg is
 derived at read time), so merging old+new partials is exact.
@@ -15,13 +18,16 @@ derived at read time), so merging old+new partials is exact.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transitlog_hfp_sink_spark.fs import path_exists
+from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json, path_exists
+from transitlog_hfp_sink_spark.sinks.merge import (
+    overwrite_partitions,
+    restrict_to_touched,
+)
 
 _DEC = "decimal(30,12)"
 
@@ -50,6 +56,12 @@ def _aggregate_partials(df: DataFrame, dims: list[str], value: str) -> DataFrame
     )
 
 
+def _with_partition_columns(partials: DataFrame) -> DataFrame:
+    return partials.withColumn("bucket_date", F.to_date("bucket")).withColumn(
+        "bucket_hour", F.hour("bucket")
+    )
+
+
 @dataclass
 class ContinuousRollupSink:
     """foreachBatch sink maintaining an hourly rollup table.
@@ -64,10 +76,6 @@ class ContinuousRollupSink:
     ts_col: str
     value_col: str
     dims: list[str]
-    #: above this many touched hour-buckets the sink stops materializing
-    #: the bucket list on the driver and filters via a broadcast semi-join
-    #: (a replay of a huge historical batch must not blow the driver)
-    max_touched_list: int = 4096
     #: physical partition granularity of the store: "hour" (default —
     #: hypertable 1 h chunk parity; bucket_date/bucket_hour directories)
     #: or "date" (bucket_date only; hour stays a data column, pruned via
@@ -109,42 +117,16 @@ class ContinuousRollupSink:
         self._layout_ok = True
 
     def _meta_path(self) -> str:
-        return os.path.join(self.path, "_last_committed_batch")
+        return f"{self.path}/_last_committed_batch"
 
     def _last_committed(self) -> int:
-        try:
-            with open(self._meta_path()) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
+        meta = self._meta_path()
+        if not path_exists(self.spark, meta):
             return -1
-
-    def _touched_filter(self, touched: list) -> F.Column:
-        """Partition-pruning filter for the touched buckets: equality on
-        the PARTITION columns (bucket_date grouped with its hours), so the
-        self-read lists only the touched hour directories instead of
-        scanning the whole store.
-
-        ``touched`` rows carry (d, h) computed JVM-SIDE with the same
-        to_date/hour expressions that produce the partition columns —
-        never derived from collected datetimes, whose Python-local-tz
-        rendering diverges from the session tz under a non-UTC session
-        (round-4 fix: that mismatch silently dropped existing partials at
-        overwrite time under Europe/Helsinki)."""
-        by_date: dict = {}
-        for r in touched:
-            by_date.setdefault(r["d"], []).append(r["h"])
-        if self.granularity == "date":
-            # the overwrite unit is a DATE dir: every hour of a touched
-            # date must be read into the merge, or untouched hours of
-            # that date would be deleted by the dir-level overwrite
-            return F.col("bucket_date").isin(sorted(by_date))
-        cond = F.lit(False)
-        for d, hours in by_date.items():
-            cond = cond | (
-                (F.col("bucket_date") == F.lit(d))
-                & F.col("bucket_hour").isin(sorted(set(hours)))
-            )
-        return cond
+        try:
+            return int(fs_read_json(self.spark, meta))
+        except (TypeError, ValueError):
+            return -1
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         # replay guard, step 1 (fast path): after a failure/restart,
@@ -153,52 +135,28 @@ class ContinuousRollupSink:
         if batch_id <= self._last_committed():
             return
         self._check_layout()
+        part_cols = self._part_cols()
         batch_df.persist()
-        prev_mode = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
         try:
             batch = batch_df.withColumn(
                 "bucket", F.date_trunc("hour", F.col(self.ts_col))
             )
             new_partials = _aggregate_partials(batch, self.dims, self.value_col)
-            touched = (
-                new_partials.select(
-                    F.to_date("bucket").alias("d"), F.hour("bucket").alias("h")
-                )
-                .distinct()
-                .limit(self.max_touched_list + 1)
-                .collect()
-            )
-            if not touched:
-                return
             merged = new_partials
             if path_exists(self.spark, self.path):
-                store = self.spark.read.parquet(self.path)
-                if len(touched) > self.max_touched_list:
-                    # giant replay: no driver-side bucket list; restrict the
-                    # store via a broadcast semi-join on the batch partials
-                    # — at the store's OVERWRITE granularity (see
-                    # _touched_filter: a date-dir overwrite must merge
-                    # every hour of a touched date)
-                    if self.granularity == "date":
-                        existing = store.join(
-                            F.broadcast(
-                                new_partials.select(
-                                    F.to_date("bucket").alias("bucket_date")
-                                ).distinct()
-                            ),
-                            on="bucket_date",
-                            how="left_semi",
-                        )
-                    else:
-                        existing = store.join(
-                            F.broadcast(new_partials.select("bucket").distinct()),
-                            on="bucket",
-                            how="left_semi",
-                        )
-                else:
-                    existing = store.where(self._touched_filter(touched))
+                # the partition columns are computed JVM-side with the
+                # same to_date/hour expressions that wrote the store, so
+                # the touched values match its directories under any
+                # session time zone
+                existing = restrict_to_touched(
+                    self.spark.read.parquet(self.path),
+                    _with_partition_columns(new_partials)
+                    .select(*part_cols)
+                    .distinct(),
+                    part_cols,
+                )
+                if existing is None:
+                    return
                 # replay guard, step 2 (crash-safe): the partition
                 # overwrite below and the meta-file write are two steps; if
                 # we crashed between them, the data already carries this
@@ -209,8 +167,7 @@ class ContinuousRollupSink:
                 if "last_batch_id" in existing.columns:
                     prev_max = existing.agg(F.max("last_batch_id")).first()[0]
                     if prev_max is not None and prev_max >= batch_id:
-                        with open(self._meta_path(), "w") as f:
-                            f.write(str(batch_id))
+                        fs_write_json(self.spark, self._meta_path(), batch_id)
                         return
                 merged = (
                     existing.select("bucket", *self.dims, "n", "sum_value_dec")
@@ -221,25 +178,20 @@ class ContinuousRollupSink:
                         F.sum("sum_value_dec").alias("sum_value_dec"),
                     )
                 )
-            out = (
-                merged.withColumn("bucket_date", F.to_date("bucket"))
-                .withColumn("bucket_hour", F.hour("bucket"))
-                .withColumn("last_batch_id", F.lit(batch_id))
+            elif new_partials.isEmpty():
+                return
+            # under "date" granularity the overwrite unit is a date dir:
+            # restrict_to_touched read every hour of a touched date into
+            # the merge, so no untouched hour is lost with it
+            overwrite_partitions(
+                _with_partition_columns(merged).withColumn(
+                    "last_batch_id", F.lit(batch_id)
+                ),
+                self.path,
+                part_cols,
             )
-            # overwrite ONLY the touched partitions. The read-then-overwrite
-            # of the same path is safe ONLY under dynamic overwrite (file
-            # deletion deferred to job commit); static mode would drop the
-            # untouched partitions — hence set + restore around the write.
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            out.write.mode("overwrite").partitionBy(*self._part_cols()).parquet(
-                self.path
-            )
-            with open(self._meta_path(), "w") as f:
-                f.write(str(batch_id))
+            fs_write_json(self.spark, self._meta_path(), batch_id)
         finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
             batch_df.unpersist()
 
     def read(self) -> DataFrame:
@@ -313,10 +265,8 @@ class ContinuousRollupSink:
                 )
                 if prev is not None:
                     stamp = max(stamp, prev)
-        out = (
-            partials.withColumn("bucket_date", F.to_date("bucket"))
-            .withColumn("bucket_hour", F.hour("bucket"))
-            .withColumn("last_batch_id", F.lit(stamp))
+        out = _with_partition_columns(partials).withColumn(
+            "last_batch_id", F.lit(stamp)
         )
         # the ranged base scan + aggregation feeds BOTH the bucket count
         # and the append below — persist so the repair path pays for the
