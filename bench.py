@@ -20,9 +20,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from transitlog_hfp_sink_spark.functions.localrel import values_df
+from transitlog_hfp_sink_spark.session import default_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = default_cpus()
 
 #: headline set: HFP parity + relational + time-series + ML pipeline ops.
 #: Registry entries that were consolidated in round 2 (events_hourly_rollup,

@@ -561,7 +561,7 @@ def test_meta_id_col_resolution():
     the flag/default."""
     import pytest
 
-    from transitlog_hfp_sink_spark.app import _meta_id_col
+    from transitlog_hfp_sink_spark.operators.similarity import _meta_id_col
 
     assert _meta_id_col({"id_col": "doc_id"}, None, "vec_id") == "doc_id"
     assert _meta_id_col({"id_col": "doc_id"}, "doc_id", "vec_id") == "doc_id"

@@ -64,78 +64,60 @@ def test_list_partition_keys_one_listing(spark, layout):
 def test_pruned_partition_read_contract(spark, layout):
     """Manifest intersect + direct paths; None on empty intersection;
     manifest=None falls back to one root listing — the uniform fallback
-    all three index kinds now share. discovery='manifest' pins the
-    probed-path plan contract explicitly (the round-11 'auto' default
-    resolves to the same path — its own test below)."""
+    all three index kinds now share. The fallback read names only the
+    matched pk=K directories in the plan (the probed-path contract)."""
+    import re
+
+    from transitlog_hfp_sink_spark.plans.inspect import explain_str
+
+    def named(df):
+        # the Location line is length-truncated by
+        # spark.sql.maxMetadataStringLength, so the named set is
+        # asserted nonempty and a subset (the ivf/ivfpq test idiom)
+        return {int(m) for m in re.findall(r"pk=(\d+)", explain_str(df, "formatted"))}
+
     manifest = [0, 1, 3]
-    df = pruned_partition_read(
-        spark, layout, "pk", [1, 2], manifest, discovery="manifest"
-    )
+    df = pruned_partition_read(spark, layout, "pk", [1, 2], manifest)
     assert sorted(r["pk"] for r in df.select("pk").distinct().collect()) == [1]
     assert df.count() == 25
     # probed keys entirely outside the manifest: no storage touched
-    # (every discovery mode short-circuits on the empty intersection)
-    for disc in ("manifest", "root", "auto"):
-        assert pruned_partition_read(
-            spark, layout, "pk", [2, 7], manifest, discovery=disc
-        ) is None
-        assert pruned_partition_read(
-            spark, layout, "pk", [], manifest, discovery=disc
-        ) is None
+    assert pruned_partition_read(spark, layout, "pk", [2, 7], manifest) is None
+    assert pruned_partition_read(spark, layout, "pk", [], manifest) is None
     # pre-manifest fallback: one listing reconstructs the manifest
-    df2 = pruned_partition_read(
-        spark, layout, "pk", [0, 2, 3], None, discovery="manifest"
-    )
+    df2 = pruned_partition_read(spark, layout, "pk", [0, 2, 3], None)
     assert sorted(
         r["pk"] for r in df2.select("pk").distinct().collect()
     ) == [0, 3]
-    # the pruned plan names only matched pk=K directories (the Location
-    # line is length-truncated by spark.sql.maxMetadataStringLength, so
-    # assert the named set is nonempty and a subset — the same idiom as
-    # the ivf/ivfpq probed-path tests)
-    import re
-
-    from transitlog_hfp_sink_spark.plans.inspect import explain_str
-
-    named = {int(m) for m in re.findall(r"pk=(\d+)", explain_str(df2, "formatted"))}
-    assert named and named <= {0, 3}, named
+    got = named(df2)
+    assert got and got <= {0, 3}, got
 
 
 def test_pruned_read_discovery_modes(spark, layout):
-    """Round 11 (VERDICT r10 #3): the manifest-vs-root cost stance.
-    'root' is result-identical to 'manifest'; 'auto' resolves to the
-    manifest path at every size (the hypothesized local-small-layout
-    crossover measured EMPTY once both modes ran through this one code
-    path — SCALING.md ivfpqserve11); an unknown mode fails loud."""
+    """Probed paths are the one discovery mode: the manifest read is
+    row-identical to a root read pruned by the partition filter, its
+    plan names only the probed pk=K directories, and the former
+    root-read knob is no longer accepted (SCALING.md ivfpqserve11
+    measured the root read slower or tied at every list count)."""
     import re
 
     from transitlog_hfp_sink_spark.plans.inspect import explain_str
 
     manifest = [0, 1, 3]
-    ref = {
+    df03 = pruned_partition_read(spark, layout, "pk", [0, 3], manifest)
+    assert {tuple(r) for r in df03.collect()} == {
         tuple(r)
-        for r in pruned_partition_read(
-            spark, layout, "pk", [0, 3], manifest, discovery="manifest"
-        ).collect()
+        for r in spark.read.parquet(layout).where(F.col("pk").isin(0, 3))
+        .select("id", "pk").collect()
     }
-    root_df = pruned_partition_read(
-        spark, layout, "pk", [0, 3], manifest, discovery="root"
-    )
-    assert {tuple(r) for r in root_df.collect()} == ref
-    # the root plan reads from the layout root: no probed pk=K paths in
-    # its file-index location (the IN filter prunes partitions instead)
-    # — while auto takes the manifest path and names exactly them
-    auto_df = pruned_partition_read(
-        spark, layout, "pk", [0, 3], manifest, discovery="auto"
-    )
-    assert {tuple(r) for r in auto_df.collect()} == ref
+    # the Location line is length-truncated by
+    # spark.sql.maxMetadataStringLength: nonempty and a subset
     named = {
-        int(m) for m in re.findall(r"pk=(\d+)", explain_str(auto_df, "formatted"))
+        int(m) for m in re.findall(r"pk=(\d+)", explain_str(df03, "formatted"))
     }
     assert named and named <= {0, 3}, named
-    with pytest.raises(ValueError, match="expected 'auto', 'manifest' or"):
+    with pytest.raises(TypeError, match="discovery"):
         pruned_partition_read(
-            spark, layout, "pk", [0], manifest, discovery="bulk"
+            spark, layout, "pk", [0], manifest, discovery="root"
         )
 
 
@@ -213,24 +195,10 @@ def test_pruned_read_stale_manifest_fails_loud(spark, layout):
     never pays the exists() probes (its keys come from the layout)."""
     stale = [0, 1, 2, 3]  # pk=2 does not exist in the layout
     with pytest.raises(RuntimeError, match=r"pk=2.*crashed between"):
-        pruned_partition_read(
-            spark, layout, "pk", [2, 3], stale, discovery="manifest"
-        )
+        pruned_partition_read(spark, layout, "pk", [2, 3], stale)
     # probed keys that all exist: served normally despite the stale entry
-    df = pruned_partition_read(
-        spark, layout, "pk", [0, 3], stale, discovery="manifest"
-    )
+    df = pruned_partition_read(spark, layout, "pk", [0, 3], stale)
     assert sorted(r["pk"] for r in df.select("pk").distinct().collect()) == [0, 3]
-    # the root path cannot name the missing directory (nothing is path-
-    # constructed) — the stale key just matches no rows; crashed-publish
-    # detection on that path is the epoch gate's job, which the serve
-    # functions run regardless of discovery mode
-    df_root = pruned_partition_read(
-        spark, layout, "pk", [2, 3], stale, discovery="root"
-    )
-    assert sorted(
-        r["pk"] for r in df_root.select("pk").distinct().collect()
-    ) == [3]
 
 
 def _emb(spark, sf_dir):
@@ -296,12 +264,13 @@ def test_bm25_kill_between_data_and_meta_serves_loud(
     spark, tmp_path, monkeypatch
 ):
     """Same done-condition for the postings kind: a re-publish killed
-    after the data write must make bm25_serve fail loud, and a
-    completed publish must serve again."""
+    after the data write must make bm25_serve and an incremental update
+    from it fail loud, and a completed publish must serve again."""
     from transitlog_hfp_sink_spark.operators import serving
     from transitlog_hfp_sink_spark.operators.search import (
         bm25_serve,
         build_postings,
+        update_postings_index,
         write_postings_index,
     )
 
@@ -323,42 +292,38 @@ def test_bm25_kill_between_data_and_meta_serves_loud(
     monkeypatch.undo()
     with pytest.raises(RuntimeError, match="crashed between"):
         bm25_serve(spark, out, [(1, "apple")], topk=3).count()
+    # an incremental update runs the same gate on its source
+    with pytest.raises(RuntimeError, match="crashed between"):
+        update_postings_index(docs.limit(2), out, str(tmp_path / "bm2"))
+    assert not (tmp_path / "bm2").exists()
 
     write_postings_index(postings, doclens, out, n_buckets=16)
     assert bm25_serve(spark, out, [(1, "apple")], topk=3).count() > 0
 
 
 def test_ivf_stale_meta_over_new_data_serves_loud(spark, sf_dir, tmp_path):
-    """IVF kind: replicate the app's publish sequence, then overwrite
-    the assignment data as a crashed re-publish would (marker cleared,
-    meta stale) — ivf_serve must fail loud; a meta with a future
+    """IVF kind: publish with write_ivf_index, then overwrite the
+    assignment data as a crashed re-publish would (marker cleared, meta
+    stale) — ivf_serve must fail loud; a meta with a future
     format_version must also fail loud (VERDICT r10 #6)."""
     from transitlog_hfp_sink_spark.operators.similarity import (
-        ivf_assign,
         ivf_centroids,
         ivf_serve,
+        write_ivf_index,
     )
 
     emb = _emb(spark, sf_dir)
     out = str(tmp_path / "ivf")
-    cents = ivf_centroids(emb, n_lists=8, max_iter=4)
-    index = ivf_assign(emb, cents)
-    index.repartition("list_id").write.partitionBy("list_id").parquet(
-        f"{out}/ivf_assign"
+    write_ivf_index(
+        emb, out, n_lists=8, centroids=ivf_centroids(emb, n_lists=8, max_iter=4)
     )
-    lists = list_partition_keys(spark, f"{out}/ivf_assign", "list_id")
-    epoch = write_epoch_marker(spark, f"{out}/ivf_assign")
-    meta = {
-        "format_version": SERVING_META_VERSION, "n_lists": 8,
-        "vec_col": "embedding", "centroids": cents, "lists": lists,
-        "id_col": "vec_id", "id_type": dict(index.dtypes)["vec_id"],
-        "epoch": epoch,
-    }
-    fs_write_json(spark, f"{out}/centroids.json", meta)
+    meta = fs_read_json(spark, f"{out}/centroids.json")
+    assert meta["format_version"] == SERVING_META_VERSION and meta["epoch"]
     queries = emb.limit(2).selectExpr("vec_id as query_id", "embedding")
     assert ivf_serve(spark, out, queries, k=3, nprobe=2).count() > 0
 
     # crashed re-publish: new data, old meta
+    index = spark.read.parquet(f"{out}/ivf_assign")
     index.limit(100).write.mode("overwrite").partitionBy("list_id").parquet(
         f"{out}/ivf_assign"
     )
@@ -372,3 +337,39 @@ def test_ivf_stale_meta_over_new_data_serves_loud(spark, sf_dir, tmp_path):
     )
     with pytest.raises(ValueError, match="newer than this engine"):
         ivf_serve(spark, out, queries, k=3, nprobe=2)
+
+
+def test_update_from_crashed_publish_fails_loud(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An incremental update runs the serving read gate on its SOURCE
+    before reading any data: re-publishing an ivfpq index with other
+    quantizers and killing it before the meta leaves data whose codes
+    the meta does not describe, and merging from it must fail loud —
+    otherwise the merged index would mix codes from two quantizer sets
+    under a fresh, valid-looking epoch. (The postings update takes the
+    same gate: test_bm25_kill_between_data_and_meta_serves_loud.)"""
+    from transitlog_hfp_sink_spark import fs
+    from transitlog_hfp_sink_spark.operators.similarity import (
+        update_ann_index,
+        write_ivfpq_index,
+    )
+
+    emb = _emb(spark, sf_dir)
+    src = str(tmp_path / "pq")
+    write_ivfpq_index(emb, src, n_lists=8, m=4, k=16)
+    batch = emb.limit(20).selectExpr("vec_id + 1000000 as vec_id", "embedding")
+    real_write = fs.fs_write_json
+
+    def meta_boom(spark_, path, obj):
+        if path.endswith(INDEX_EPOCH_FILE):
+            return real_write(spark_, path, obj)
+        raise RuntimeError("killed before meta")
+
+    monkeypatch.setattr(fs, "fs_write_json", meta_boom)
+    with pytest.raises(RuntimeError, match="killed before meta"):
+        write_ivfpq_index(emb, src, n_lists=8, m=4, k=16, seed=99)
+    monkeypatch.undo()
+    with pytest.raises(RuntimeError, match="crashed between"):
+        update_ann_index("ivfpq", batch, src, str(tmp_path / "pq2"))
+    assert not (tmp_path / "pq2").exists()

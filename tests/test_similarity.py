@@ -871,42 +871,19 @@ def test_ivf_served_prune_auto_cost_decision(spark, sf_dir):
     assert a == f and a
 
 
-def _write_app_ivf_layout(spark, sf_dir, tmp_path, n_lists=64):
-    """Replicate the `app build-index --kind ivf` layout (partitionBy
-    list_id + centroids.json with the round-9 manifest fields)."""
-    import json
-
-    from pyspark.sql import functions as F  # noqa: F401
-
+def _write_ivf_layout(spark, sf_dir, tmp_path, n_lists=64):
+    """An IVF serving layout (write_ivf_index) over the embeddings."""
     from transitlog_hfp_sink_spark.operators.similarity import (
-        ivf_assign,
         ivf_centroids,
+        write_ivf_index,
     )
     from transitlog_hfp_sink_spark.sources.files import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(emb, n_lists=n_lists, max_iter=6)
     out = str(tmp_path / "ivf_layout")
-    index = ivf_assign(emb, cents)
-    index.repartition("list_id").write.partitionBy("list_id").parquet(
-        f"{out}/ivf_assign"
+    cents = write_ivf_index(
+        emb, out, centroids=ivf_centroids(emb, n_lists=n_lists, max_iter=6)
     )
-    import os
-
-    lists = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(f"{out}/ivf_assign")
-        if d.startswith("list_id=")
-    )
-    with open(f"{out}/centroids.json", "w") as f:
-        json.dump(
-            {
-                "n_lists": n_lists, "vec_col": "embedding",
-                "centroids": cents, "lists": lists,
-                "id_col": "vec_id", "id_type": dict(index.dtypes)["vec_id"],
-            },
-            f,
-        )
     return out, emb, cents
 
 
@@ -921,15 +898,11 @@ def test_ivf_serve_layout_matches_full_index_and_lists_only_probed(
     from transitlog_hfp_sink_spark.operators.similarity import ivf_serve, ivf_topk
     from transitlog_hfp_sink_spark.plans.inspect import explain_str
 
-    out, emb, cents = _write_app_ivf_layout(spark, sf_dir, tmp_path)
+    out, emb, cents = _write_ivf_layout(spark, sf_dir, tmp_path)
     queries = emb.where(F.col("vec_id").isin([5, 9])).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # discovery='manifest' pins the probed-path plan contract; the
-    # round-11 'auto' default resolves to the same path and must be
-    # row-identical
-    served = ivf_serve(spark, out, queries, k=3, nprobe=2,
-                       discovery="manifest")
+    served = ivf_serve(spark, out, queries, k=3, nprobe=2)
     full = ivf_topk(
         emb, queries, k=3, n_lists=64, nprobe=2, centroids=cents,
         index=spark.read.parquet(f"{out}/ivf_assign"), prune_lists=False,
@@ -937,9 +910,6 @@ def test_ivf_serve_layout_matches_full_index_and_lists_only_probed(
     s = sorted(tuple(r) for r in served.collect())
     u = sorted(tuple(r) for r in full.collect())
     assert s == u and s
-    assert s == sorted(
-        tuple(r) for r in ivf_serve(spark, out, queries, k=3, nprobe=2).collect()
-    )
 
     from transitlog_hfp_sink_spark.operators.similarity import _nearest_lists_py
 
@@ -960,24 +930,23 @@ def test_ivf_serve_pre_manifest_layout_and_null_queries(spark, sf_dir, tmp_path)
     """Pre-round-9 centroids.json (no manifest) falls back to one root
     listing and still matches; an all-NULL query batch serves an empty,
     correctly-typed frame."""
-    import json
-
     from pyspark.sql import functions as F
 
+    from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json
     from transitlog_hfp_sink_spark.operators.similarity import ivf_serve
 
-    out, emb, cents = _write_app_ivf_layout(spark, sf_dir, tmp_path)
+    out, emb, cents = _write_ivf_layout(spark, sf_dir, tmp_path)
     queries = emb.where(F.col("vec_id").isin([5, 9])).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     with_manifest = sorted(
         tuple(r) for r in ivf_serve(spark, out, queries, k=3, nprobe=2).collect()
     )
-    with open(f"{out}/centroids.json") as f:
-        meta = json.load(f)
+    # through the Hadoop FS API: a plain open() rewrite would leave the
+    # local filesystem's .crc sidecar stale and fail the next read
+    meta = fs_read_json(spark, f"{out}/centroids.json")
     legacy = {k: v for k, v in meta.items() if k in ("n_lists", "vec_col", "centroids")}
-    with open(f"{out}/centroids.json", "w") as f:
-        json.dump(legacy, f)
+    fs_write_json(spark, f"{out}/centroids.json", legacy)
     got = sorted(
         tuple(r) for r in ivf_serve(spark, out, queries, k=3, nprobe=2).collect()
     )
@@ -1016,11 +985,7 @@ def test_ivfpq_serve_layout_matches_full_index(spark, sf_dir, tmp_path):
     queries = emb.where(F.col("vec_id").isin([3, 7])).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # discovery='manifest' pins the probed-path plan contract; the
-    # round-11 'auto' default resolves to the same path and must be
-    # row-identical
-    served = ivfpq_serve(spark, out, queries, k=3, nprobe=2,
-                         discovery="manifest")
+    served = ivfpq_serve(spark, out, queries, k=3, nprobe=2)
     full = ivfpq_topk(
         spark.read.parquet(f"{out}/ivfpq_codes"), queries, cents, books,
         k=3, nprobe=2,
@@ -1028,10 +993,6 @@ def test_ivfpq_serve_layout_matches_full_index(spark, sf_dir, tmp_path):
     s = sorted(tuple(r) for r in served.collect())
     u = sorted(tuple(r) for r in full.collect())
     assert s == u and s
-    assert s == sorted(
-        tuple(r)
-        for r in ivfpq_serve(spark, out, queries, k=3, nprobe=2).collect()
-    )
 
     vecs = {
         r["query_id"]: [float(x) for x in r["embedding"]] for r in queries.collect()
@@ -1162,13 +1123,11 @@ def test_ivf_serve_defaults_vec_col_from_meta(spark, sf_dir, tmp_path):
     to the meta-recorded name (mirroring ivfpq_serve)."""
     from pyspark.sql import functions as F
 
-    from transitlog_hfp_sink_spark.fs import fs_write_json
-    from transitlog_hfp_sink_spark.operators.serving import list_partition_keys
     from transitlog_hfp_sink_spark.operators.similarity import (
-        ivf_assign,
         ivf_centroids,
         ivf_serve,
         ivf_topk,
+        write_ivf_index,
     )
     from transitlog_hfp_sink_spark.sources.files import read_table
 
@@ -1177,16 +1136,7 @@ def test_ivf_serve_defaults_vec_col_from_meta(spark, sf_dir, tmp_path):
     )
     cents = ivf_centroids(emb, n_lists=8, vec_col="emb2", max_iter=6)
     out = str(tmp_path / "ivf_veccol")
-    index = ivf_assign(emb, cents, vec_col="emb2")
-    index.repartition("list_id").write.partitionBy("list_id").parquet(
-        f"{out}/ivf_assign"
-    )
-    fs_write_json(
-        spark, f"{out}/centroids.json",
-        {"n_lists": 8, "vec_col": "emb2", "centroids": cents,
-         "lists": list_partition_keys(spark, f"{out}/ivf_assign", "list_id"),
-         "id_col": "vec_id", "id_type": dict(index.dtypes)["vec_id"]},
-    )
+    write_ivf_index(emb, out, vec_col="emb2", centroids=cents)
     queries = emb.where(F.col("vec_id").isin([5, 9])).select(
         F.col("vec_id").alias("query_id"), "emb2"
     )
@@ -1239,3 +1189,58 @@ def test_ivf_topk_corpus_path_shares_null_and_validation_contract(
             emb, queries, k=3, n_lists=8, nprobe=2, centroids=cents,
             prune_lists="yes-please",
         )
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_update_ann_index_equals_fresh_build_over_merged_corpus(
+    spark, sf_dir, tmp_path, kind
+):
+    """Incremental update, library path: build from the even ids, then
+    update with the odd ids plus one even id whose vector changed. The
+    served top-k must equal a fresh build over the merged corpus with the
+    same quantizers, the changed id must be replaced (last write wins),
+    and the update must record the same meta a fresh build records."""
+    from transitlog_hfp_sink_spark.fs import fs_read_json
+    from transitlog_hfp_sink_spark.operators.similarity import (
+        ANN_LAYOUTS,
+        ivf_serve,
+        ivfpq_serve,
+        update_ann_index,
+        write_ivf_index,
+        write_ivfpq_index,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    even, odd = F.col("vec_id") % 2 == 0, F.col("vec_id") % 2 == 1
+    changed = emb.where(F.col("vec_id") == 2).select(
+        "vec_id", F.transform("embedding", lambda x: -x).alias("embedding")
+    )
+    batch = emb.where(odd).unionByName(changed)
+    merged = emb.where(even & (F.col("vec_id") != 2)).unionByName(batch)
+    src, out, ref = (str(tmp_path / d) for d in ("src", "out", "ref"))
+    if kind == "ivf":
+        cents = write_ivf_index(emb.where(even), src, n_lists=8)
+        write_ivf_index(merged, ref, centroids=cents)
+        serve = ivf_serve
+    else:
+        cents, books = write_ivfpq_index(emb.where(even), src, n_lists=8, m=4, k=16)
+        write_ivfpq_index(merged, ref, m=4, k=16, centroids=cents, codebooks=books)
+        serve = ivfpq_serve
+    meta = update_ann_index(kind, batch, src, out)
+
+    data_dir, meta_file, _ = ANN_LAYOUTS[kind]
+    rows, ids = spark.read.parquet(f"{out}/{data_dir}").agg(
+        F.count("*"), F.countDistinct("vec_id")
+    ).first()
+    assert rows == ids == emb.count()  # the changed id replaced, not added
+    ref_meta = fs_read_json(spark, f"{ref}/{meta_file}")
+    assert meta["epoch"] != ref_meta["epoch"]
+    assert {k: v for k, v in meta.items() if k != "epoch"} == {
+        k: v for k, v in ref_meta.items() if k != "epoch"
+    }
+    queries = merged.where(F.col("vec_id").isin(2, 3, 7)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = sorted(tuple(r) for r in serve(spark, out, queries, k=3, nprobe=2).collect())
+    want = sorted(tuple(r) for r in serve(spark, ref, queries, k=3, nprobe=2).collect())
+    assert got == want and got

@@ -79,17 +79,11 @@ def serve_fingerprints(spark, sf_dir: str, tag: str) -> dict[str, dict]:
         bm25_serve,
         write_postings_index,
     )
-    from transitlog_hfp_sink_spark.fs import fs_write_json
-    from transitlog_hfp_sink_spark.operators.serving import (
-        SERVING_META_VERSION,
-        list_partition_keys,
-        write_epoch_marker,
-    )
     from transitlog_hfp_sink_spark.operators.similarity import (
-        ivf_assign,
         ivf_centroids,
         ivf_serve,
         ivfpq_serve,
+        write_ivf_index,
         write_ivfpq_index,
     )
     from transitlog_hfp_sink_spark.sources.files import read_table
@@ -102,19 +96,8 @@ def serve_fingerprints(spark, sf_dir: str, tag: str) -> dict[str, dict]:
     write_postings_index(postings, doclens, f"{base}/bm", n_buckets=1024)
     served_bm = bm25_serve(spark, f"{base}/bm", [(1, "apple banana")], topk=5)
 
-    cents = ivf_centroids(emb, n_lists=32, max_iter=3)
-    index = ivf_assign(emb, cents)
-    index.repartition("list_id").write.partitionBy("list_id").parquet(
-        f"{base}/ivf/ivf_assign"
-    )
-    lists = list_partition_keys(spark, f"{base}/ivf/ivf_assign", "list_id")
-    epoch = write_epoch_marker(spark, f"{base}/ivf/ivf_assign")
-    fs_write_json(
-        spark, f"{base}/ivf/centroids.json",
-        {"format_version": SERVING_META_VERSION, "n_lists": 32,
-         "vec_col": "embedding", "centroids": cents, "lists": lists,
-         "id_col": "vec_id", "id_type": dict(index.dtypes)["vec_id"],
-         "epoch": epoch},
+    write_ivf_index(
+        emb, f"{base}/ivf", centroids=ivf_centroids(emb, n_lists=32, max_iter=3)
     )
     queries = emb.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
     served_ivf = ivf_serve(spark, f"{base}/ivf", queries, k=3, nprobe=2)

@@ -85,11 +85,11 @@ def parse_eventlog(path: str) -> dict:
 def main() -> None:
     only = sys.argv[1:]
     os.makedirs(EVDIR, exist_ok=True)
-    from transitlog_hfp_sink_spark.session import build_session
+    from transitlog_hfp_sink_spark.session import build_session, default_cpus
     from transitlog_hfp_sink_spark.queries import queries as all_queries
     from bench import BENCH_QUERIES, bench_overrides
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = build_session(
         app_name="profile-r11", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

@@ -255,8 +255,7 @@ def main() -> None:
         if family in ("counts10", "lshcounts10", "lshincr10", "lshincr11")
         else None
     )
-    spark = build_session(app_name="stress-sf1", master="local[32]",
-                          shuffle_partitions=32, extra_conf=extra)
+    spark = build_session(app_name="stress-sf1", extra_conf=extra)
     if family == "counts10":
         run_counts10(spark)
         return
@@ -271,9 +270,6 @@ def main() -> None:
         return
     if family == "ivfpqserve10":
         run_ivfpqserve10(spark)
-        return
-    if family == "ivfpqserve11":
-        run_ivfpqserve11(spark)
         return
     if family == "sessionize10":
         run_sessionize10(spark)
@@ -1235,104 +1231,6 @@ def run_ivfpqserve10(spark) -> None:
     with open("SCALING.md", "a") as f:
         f.write("\n".join(lines) + "\n")
     print("appended ivfpqserve10 probe to SCALING.md")
-
-
-def run_ivfpqserve11(spark) -> None:
-    """Round 11 (VERDICT r10 #3): the manifest-vs-root crossover,
-    measured INSIDE ivfpq_serve's discovery modes (round 10 compared
-    ivfpq_serve against the separate ivfpq_topk root path; the
-    discovery parameter now makes the comparison apples-to-apples on
-    one code path). Same synthesized 1M-vector layout as ivfpqserve10,
-    adding the 1024-list point that narrows the [256, 2560] bracket the
-    round-10 probe left, plus an 'auto' leg recording the shipped
-    decision at each size. Regenerate:
-    `python tools/stress_sf1.py ivfpqserve11`.
-    """
-    import random
-    import tempfile
-
-    from transitlog_hfp_sink_spark.fs import fs_write_json
-    from transitlog_hfp_sink_spark.operators.serving import list_partition_keys
-    from transitlog_hfp_sink_spark.operators.similarity import ivfpq_serve
-
-    n, m, kk, dim, nprobe = 1_000_000, 8, 16, 64, 4
-    rng = random.Random(7)
-    qrows = [(q, [rng.uniform(-1, 1) for _ in range(dim)]) for q in range(16)]
-    qdf = spark.createDataFrame(qrows, "query_id int, embedding array<double>")
-    results = []
-    for n_lists in (256, 1024, 2560):
-        cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(n_lists)]
-        books = [
-            [[rng.uniform(-1, 1) for _ in range(dim // m)] for _ in range(kk)]
-            for _ in range(m)
-        ]
-        d = tempfile.mkdtemp(prefix=f"ivfpqserve11-{n_lists}-")
-        codes = F.array(*[
-            F.pmod(F.xxhash64("id", F.lit(j)), F.lit(kk)).cast("tinyint")
-            for j in range(m)
-        ])
-        (
-            spark.range(n)
-            .select(
-                F.col("id").alias("vec_id"),
-                F.pmod(F.col("id"), F.lit(n_lists)).cast("int").alias("list_id"),
-                codes.alias("codes"),
-            )
-            .repartition("list_id")
-            .write.partitionBy("list_id")
-            .parquet(f"{d}/ivfpq_codes")
-        )
-        fs_write_json(
-            spark, f"{d}/ivfpq_meta.json",
-            {"n_lists": n_lists, "m": m, "k": kk, "vec_col": "embedding",
-             "id_col": "vec_id", "id_type": "bigint", "centroids": cents,
-             "codebooks": books,
-             "lists": list_partition_keys(spark, f"{d}/ivfpq_codes", "list_id")},
-        )
-        # auto resolves to manifest at every size — the crossover
-        # measured empty on the unified path (see the SCALING reading)
-        auto_pick = "manifest"
-        counts_seen = set()
-        for mode in ("manifest", "root", "auto"):
-            def _run():
-                return ivfpq_serve(
-                    spark, d, qdf, k=5, nprobe=nprobe, discovery=mode
-                ).count()
-
-            _run()  # warmup (JIT/codegen; file listings are NOT cached
-            # across runs — each read builds a fresh file index)
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                n_rows = _run()
-                best = min(best, time.time() - t0)
-            counts_seen.add(n_rows)
-            label = mode if mode != "auto" else f"auto -> {auto_pick}"
-            results.append((n_lists, label, best, n_rows))
-            print(f"n_lists={n_lists} discovery={label}: t={best:.2f}s "
-                  f"rows={n_rows}", flush=True)
-        assert len(counts_seen) == 1, f"discovery changed the output: {counts_seen}"
-    lines = [
-        "",
-        "## IVF-PQ discovery-mode probe — the manifest-vs-root crossover, acted on (round 11)",
-        "",
-        "VERDICT r10 #3: serving now carries discovery='auto' (root read",
-        "iff LOCAL filesystem and manifest <= ROOT_DISCOVERY_MAX_LISTS",
-        "directories, else manifest paths; operators/serving.py). Same",
-        "synthesized 1M-vector layout as ivfpqserve10, all modes through",
-        "ONE code path (ivfpq_serve's discovery parameter), adding the",
-        "1024-list point to narrow the round-10 [256, 2560] bracket;",
-        "result-count equality across modes asserted in-probe.",
-        "Regenerate: `python tools/stress_sf1.py ivfpqserve11`.",
-        "",
-        "| n_lists | discovery | time (s) | result rows |",
-        "|---|---|---|---|",
-    ]
-    for n_lists, label, best, n_rows in results:
-        lines.append(f"| {n_lists} | {label} | {best:.2f} | {n_rows} |")
-    with open("SCALING.md", "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("appended ivfpqserve11 probe to SCALING.md")
 
 
 def run_lsh10(spark) -> None:

@@ -315,29 +315,16 @@ def _export(argv: list[str]) -> int:
         spark.stop()
 
 
-def _meta_id_col(meta: dict, flag_value: str | None, default: str) -> str:
-    """The id column an incremental index update should use (ADVICE r9):
-    the meta-recorded one wins; an explicit --id-col that CONFLICTS with
-    it fails loud here (the alternative was an opaque AnalysisException
-    deep in the upsert anti-join). Pre-round-9 metas lack the field and
-    fall back to the flag/default."""
-    recorded = meta.get("id_col")
-    if flag_value and recorded and flag_value != recorded:
-        raise ValueError(
-            f"index was built with id_col={recorded!r}, got --id-col "
-            f"{flag_value!r}: an incremental update must key on the "
-            "stored index's id column"
-        )
-    return flag_value or recorded or default
-
-
 def _build_index(argv: list[str]) -> int:
     """Build (or incrementally update) a persisted serving index — the
     index-once/query-many ops step the serving-shape benchmarks assume:
-    a BM25 postings index (operators/search.py) or an IVF-flat ANN index
-    (operators/similarity.py: trained centroids + per-vector list
-    assignment). Updates write to a NEW --output (flip a pointer to
-    deploy) so a crash mid-write can never corrupt the live index."""
+    a BM25 postings index (operators/search.py) or an IVF-flat / IVF-PQ
+    ANN index (operators/similarity.py). This parses the flags and makes
+    one library call per kind; the libraries own the layouts and the
+    publish protocol (operators/serving.py). Updates write to a NEW
+    --output (flip a pointer to deploy) so a crash mid-write can never
+    corrupt the live index, and read their source only after it passes
+    the serving read gate."""
     import json
 
     p = argparse.ArgumentParser(prog="app build-index")
@@ -375,237 +362,53 @@ def _build_index(argv: list[str]) -> int:
         corpus = spark.read.parquet(args.input)
         if args.kind == "postings":
             from transitlog_hfp_sink_spark.operators.search import (
+                N_TERM_BUCKETS,
                 build_postings,
-                update_postings,
+                update_postings_index,
+                write_postings_index,
             )
 
             id_col = args.id_col or "doc_id"
+            n_buckets = args.n_buckets or N_TERM_BUCKETS
             if args.update_from:
-                # the stored layout carries the tb partition column
-                # (write_postings_index); the merge works on the logical
-                # (term, doc_id, tf, dl) rows and re-buckets on write
-                postings = spark.read.parquet(
-                    f"{args.update_from}/postings"
-                ).drop("tb")
-                doclens = spark.read.parquet(f"{args.update_from}/doclens")
-                postings, doclens = update_postings(
-                    postings, doclens, corpus,
-                    text_col=args.text_col, id_col=id_col,
+                update_postings_index(
+                    corpus, args.update_from, args.output,
+                    text_col=args.text_col, id_col=id_col, n_buckets=n_buckets,
                 )
             else:
                 postings, doclens = build_postings(
                     corpus, text_col=args.text_col, id_col=id_col
                 )
-            from transitlog_hfp_sink_spark.operators.search import (
-                write_postings_index,
-            )
-
-            from transitlog_hfp_sink_spark.operators.search import (
-                N_TERM_BUCKETS,
-            )
-
-            # serving layout (round 8): postings partitioned by the
-            # term-hash bucket so bm25_serve prunes to the query terms'
-            # tb=K/ directories instead of scanning the whole index
-            write_postings_index(
-                postings, doclens, args.output,
-                n_buckets=args.n_buckets or N_TERM_BUCKETS,
-            )
+                write_postings_index(
+                    postings, doclens, args.output, n_buckets=n_buckets
+                )
             report = {
                 "postings_rows": spark.read.parquet(f"{args.output}/postings").count(),
                 "docs": spark.read.parquet(f"{args.output}/doclens").count(),
             }
-        elif args.kind == "ivfpq":
-            # the composed 100 TB index as a persisted serving artifact
-            # (round 9 — completes the build-index family): residual PQ
-            # codes partitioned by list_id + quantizers/manifest meta,
-            # served by similarity.ivfpq_serve. --update-from reuses the
-            # stored quantizers (retraining would orphan every
-            # historical code) and upserts only the new batch's codes —
-            # last-write-wins, same contract as the ivf/postings kinds.
-            from pyspark.sql import functions as F
-
-            from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json
-            from transitlog_hfp_sink_spark.operators.serving import (
-                SERVING_META_VERSION,
-                list_partition_keys,
-                write_epoch_marker,
-            )
+        else:
             from transitlog_hfp_sink_spark.operators.similarity import (
-                ivfpq_encode,
+                ANN_LAYOUTS,
+                update_ann_index,
+                write_ivf_index,
                 write_ivfpq_index,
             )
 
+            n_lists = args.n_lists if args.n_lists is not None else 16
             if args.update_from:
-                meta = fs_read_json(
-                    spark, f"{args.update_from}/ivfpq_meta.json"
-                )
-                if meta["vec_col"] != args.vec_col:
-                    raise ValueError(
-                        f"index was built on vec_col={meta['vec_col']!r}, "
-                        f"got --vec-col {args.vec_col!r}"
-                    )
-                # the meta records the id column too (ADVICE r9): an
-                # update inherits it, and a conflicting explicit --id-col
-                # fails loud here instead of as an opaque
-                # AnalysisException in the anti-join below
-                id_col = _meta_id_col(meta, args.id_col, "vec_id")
-                cents, books = meta["centroids"], meta["codebooks"]
-                dim = len(cents[0])
-                bad = corpus.where(
-                    F.col(args.vec_col).isNull()
-                    | (F.size(args.vec_col) != dim)
-                ).select(F.col(id_col), F.size(args.vec_col).alias("dim")).head(1)
-                if bad:
-                    raise ValueError(
-                        f"vector dim mismatch vs trained quantizers: row "
-                        f"(id={bad[0][id_col]!r}, dim={bad[0]['dim']}) != "
-                        f"index dim {dim}"
-                    )
-                fresh = ivfpq_encode(
-                    corpus, cents, books, id_col=id_col, vec_col=args.vec_col
-                )
-                old = spark.read.parquet(f"{args.update_from}/ivfpq_codes")
-                merged = old.join(
-                    F.broadcast(fresh.select(id_col).distinct()),
-                    on=id_col, how="left_anti",
-                ).unionByName(fresh.select(*old.columns))
-                # write the merged codes in the serving layout and
-                # refresh the manifest; quantizers carry over unchanged
-                (
-                    merged.repartition("list_id")
-                    .write.mode("overwrite")
-                    .partitionBy("list_id")
-                    .parquet(f"{args.output}/ivfpq_codes")
-                )
-                lists = list_partition_keys(
-                    spark, f"{args.output}/ivfpq_codes", "list_id"
-                )
-                # publish-consistency epoch (round 11, VERDICT r10 #1):
-                # data -> marker -> meta (atomic temp+rename); a crash
-                # between any two steps makes ivfpq_serve fail loud
-                # instead of serving merged codes under the stale meta
-                epoch = write_epoch_marker(
-                    spark, f"{args.output}/ivfpq_codes"
-                )
-                fs_write_json(
-                    spark, f"{args.output}/ivfpq_meta.json",
-                    {**meta, "lists": lists, "epoch": epoch,
-                     "format_version": SERVING_META_VERSION},
-                )
-                n_lists = int(meta["n_lists"])
+                n_lists = update_ann_index(
+                    args.kind, corpus, args.update_from, args.output,
+                    id_col=args.id_col, vec_col=args.vec_col,
+                )["n_lists"]
             else:
-                id_col = args.id_col or "vec_id"
-                n_lists = args.n_lists if args.n_lists is not None else 16
-                write_ivfpq_index(
+                write = write_ivf_index if args.kind == "ivf" else write_ivfpq_index
+                write(
                     corpus, args.output, n_lists=n_lists,
-                    id_col=id_col, vec_col=args.vec_col,
+                    id_col=args.id_col or "vec_id", vec_col=args.vec_col,
                 )
+            data_dir = ANN_LAYOUTS[args.kind][0]
             report = {
-                "vectors": spark.read.parquet(
-                    f"{args.output}/ivfpq_codes"
-                ).count(),
-                "n_lists": n_lists,
-            }
-        else:
-            from transitlog_hfp_sink_spark.fs import fs_read_json, fs_write_json
-            from transitlog_hfp_sink_spark.operators.serving import (
-                SERVING_META_VERSION,
-                list_partition_keys,
-                write_epoch_marker,
-            )
-            from transitlog_hfp_sink_spark.operators.similarity import (
-                ivf_assign,
-                ivf_centroids,
-            )
-
-            if args.update_from:
-                # incremental append: REUSE the old index's trained
-                # centroids (retraining from the new batch alone would
-                # shift every list boundary and orphan the historical
-                # assignments), assign ONLY the new batch map-side, and
-                # upsert it into the assignment table — a re-sent id's
-                # NEW vector wins via anti-join, same last-write-wins
-                # contract as update_postings
-                meta = fs_read_json(
-                    spark, f"{args.update_from}/centroids.json"
-                )
-                if meta["vec_col"] != args.vec_col:
-                    raise ValueError(
-                        f"index was built on vec_col={meta['vec_col']!r}, "
-                        f"got --vec-col {args.vec_col!r}"
-                    )
-                # inherit the recorded id column; a conflicting explicit
-                # --id-col fails loud (ADVICE r9; pre-r9 metas lack the
-                # field and fall back to the flag/default)
-                id_col = _meta_id_col(meta, args.id_col, "vec_id")
-                cents = meta["centroids"]
-                n_lists = meta["n_lists"]
-                # dimension guard, BEFORE assigning: a batch whose vectors
-                # don't match the trained centroid dim would NULL every
-                # zip_with distance and silently dump all vectors into
-                # list 0 (column-pruned LIMIT-1 scan, fail-loud instead)
-                dim = len(cents[0])
-                from pyspark.sql import functions as F
-
-                bad = corpus.where(
-                    F.col(args.vec_col).isNull()
-                    | (F.size(args.vec_col) != dim)
-                ).select(F.col(id_col), F.size(args.vec_col).alias("dim")).head(1)
-                if bad:
-                    raise ValueError(
-                        f"vector dim mismatch vs trained centroids: row "
-                        f"(id={bad[0][id_col]!r}, dim={bad[0]['dim']}) != "
-                        f"index dim {dim}"
-                    )
-                fresh = ivf_assign(
-                    corpus, cents, id_col=id_col, vec_col=args.vec_col
-                )
-                old = spark.read.parquet(f"{args.update_from}/ivf_assign")
-                # broadcast the batch-id scrub so the (large) historical
-                # index is never shuffled — same shape as update_postings;
-                # the ids side column-prunes to a plain id scan
-                index = old.join(
-                    F.broadcast(fresh.select(id_col).distinct()),
-                    on=id_col, how="left_anti",
-                ).unionByName(fresh)
-            else:
-                id_col = args.id_col or "vec_id"
-                n_lists = args.n_lists if args.n_lists is not None else 16
-                cents = ivf_centroids(
-                    corpus, n_lists=n_lists, vec_col=args.vec_col
-                )
-                index = ivf_assign(
-                    corpus, cents, id_col=id_col, vec_col=args.vec_col
-                )
-            # partitioned by list_id (round 8): ivf_topk's serving-side
-            # probed-lists IN filter then prunes whole list directories
-            # instead of scanning the full assignment table
-            index.repartition("list_id").write.mode("overwrite").partitionBy(
-                "list_id"
-            ).parquet(f"{args.output}/ivf_assign")
-            # round 9: record the LIST MANIFEST (which list_id=K/ dirs
-            # exist — one listing at build time) plus the id column/type,
-            # so ivf_serve opens only probed directories without any
-            # per-query discovery (the same amortization bm25_serve's
-            # meta got; empty lists simply have no directory)
-            lists = list_partition_keys(
-                spark, f"{args.output}/ivf_assign", "list_id"
-            )
-            id_type = dict(index.dtypes)[id_col]
-            # publish-consistency epoch (round 11, VERDICT r10 #1):
-            # data -> marker -> meta (atomic temp+rename in
-            # fs_write_json); ivf_serve fails loud on any crash between
-            epoch = write_epoch_marker(spark, f"{args.output}/ivf_assign")
-            fs_write_json(
-                spark, f"{args.output}/centroids.json",
-                {"format_version": SERVING_META_VERSION,
-                 "n_lists": n_lists, "vec_col": args.vec_col,
-                 "centroids": cents, "lists": lists,
-                 "id_col": id_col, "id_type": id_type, "epoch": epoch},
-            )
-            report = {
-                "vectors": spark.read.parquet(f"{args.output}/ivf_assign").count(),
+                "vectors": spark.read.parquet(f"{args.output}/{data_dir}").count(),
                 "n_lists": n_lists,
             }
         print(json.dumps({

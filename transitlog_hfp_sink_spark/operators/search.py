@@ -409,12 +409,18 @@ def write_postings_index(
     manifest, bm25_serve constructs the matched ``tb=K/`` paths directly
     and lists only those.
     """
-    (
-        postings.withColumn("tb", term_bucket(F.col("term"), n_buckets))
-        .repartition("tb")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(f"{path}/postings")
+    from transitlog_hfp_sink_spark.operators.serving import (
+        SERVING_META_VERSION,
+        publish_partitioned,
+    )
+
+    # the shared publish (operators/serving.py): data, then ONE listing
+    # of the layout root for the manifest, then the epoch marker. The
+    # doclens write follows the marker, so a crash before the meta
+    # still leaves a marker the old meta does not name.
+    buckets, epoch = publish_partitioned(
+        postings.withColumn("tb", term_bucket(F.col("term"), n_buckets)),
+        f"{path}/postings", "tb",
     )
     doclens.write.mode("overwrite").parquet(f"{path}/doclens")
     spark = postings.sparkSession
@@ -429,25 +435,9 @@ def write_postings_index(
     n_docs, avgdl = (
         spark.read.parquet(f"{path}/doclens").agg(F.count("*"), F.avg("dl"))
     ).collect()[0]
-    # the manifest: ONE listing of the layout root at build time (Hadoop
-    # FS API, so any Spark-reachable filesystem works), amortizing the
-    # per-query discovery cost into the build — shared with the IVF /
-    # IVF-PQ layouts since round 10 (operators/serving.py)
-    from transitlog_hfp_sink_spark.operators.serving import (
-        SERVING_META_VERSION,
-        list_partition_keys,
-        write_epoch_marker,
-    )
-
-    buckets = list_partition_keys(spark, f"{path}/postings", "tb")
     schema_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in postings.schema.fields
     )
-    # publish-consistency epoch (round 11, VERDICT r10 #1): stamped into
-    # the data directory AFTER all data writes and echoed in the meta —
-    # bm25_serve compares the two and fails loud on a publish that
-    # crashed between data and meta (operators/serving.py)
-    epoch = write_epoch_marker(spark, f"{path}/postings")
     spark.createDataFrame(
         [(
             n_buckets,
@@ -464,6 +454,26 @@ def write_postings_index(
     ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
 
 
+#: fields a current-version postings meta must carry (validate_meta)
+POSTINGS_META_FIELDS = (
+    "n_buckets", "n_docs", "avgdl", "buckets", "postings_schema", "epoch",
+)
+
+
+def _published_postings_meta(spark: SparkSession, path: str):
+    """The meta row of a write_postings_index layout, past the shared
+    read gate (serving.check_published) that serving and incremental
+    updates both run before touching the postings."""
+    from transitlog_hfp_sink_spark.operators.serving import check_published
+
+    meta = spark.read.json(f"{path}/meta").collect()[0]
+    check_published(
+        spark, meta.asDict(), "bm25 postings", POSTINGS_META_FIELDS,
+        f"{path}/postings",
+    )
+    return meta
+
+
 def bm25_serve(
     spark: SparkSession,
     path: str,
@@ -471,7 +481,6 @@ def bm25_serve(
     k1: float = K1,
     b: float = B,
     topk: int = 10,
-    discovery: str = "auto",
 ) -> DataFrame:
     """Score queries against a write_postings_index layout with partition
     pruning: only the query terms' ``tb=K/`` directories are scanned.
@@ -493,28 +502,16 @@ def bm25_serve(
     takes the helper's fallback — ONE root listing reconstructs it
     (previously a root read + IN filter; result-identical, and the
     fallback behavior is now uniform across all three index kinds).
-    discovery: the manifest-vs-root read stance, resolved by
-    measurement in round 11 (VERDICT r10 #3) — see
-    serving.pruned_partition_read; 'auto' (default) takes manifest
-    paths at every size."""
+
+    The meta passes the shared read gate first (serving.check_published):
+    a meta this engine cannot read, a current-version meta missing
+    fields, or a (data, meta) pair whose publish epochs disagree fails
+    loud."""
     from transitlog_hfp_sink_spark.operators.serving import (
-        check_index_epoch,
         pruned_partition_read,
-        validate_meta,
     )
 
-    meta = spark.read.json(f"{path}/meta").collect()[0]
-    # round 11 (VERDICT r10 #1/#6): refuse a meta this engine cannot
-    # read, a current-version meta missing fields, or a (data, meta)
-    # pair whose publish epochs disagree — the crashed-publish signature
-    meta_doc = meta.asDict()
-    validate_meta(
-        meta_doc, "bm25 postings",
-        ("n_buckets", "n_docs", "avgdl", "buckets", "postings_schema", "epoch"),
-    )
-    check_index_epoch(
-        spark, meta_doc.get("epoch"), f"{path}/postings", "bm25_serve"
-    )
+    meta = _published_postings_meta(spark, path)
     n_buckets = int(meta["n_buckets"])
     qdf = values_df(spark, queries, "query_id int, qtext string")
     query_terms = qdf.select(
@@ -530,8 +527,7 @@ def bm25_serve(
         else None
     )
     pruned = pruned_partition_read(
-        spark, f"{path}/postings", "tb", buckets, manifest,
-        discovery=discovery,
+        spark, f"{path}/postings", "tb", buckets, manifest
     )
     if pruned is None:
         # no query term hashes into any existing bucket: the matched
@@ -593,3 +589,28 @@ def update_postings(
         kept_postings.unionByName(new_postings.select(*postings.columns)),
         kept_doclens.unionByName(new_doclens.select(*doclens.columns)),
     )
+
+
+def update_postings_index(
+    new_docs: DataFrame,
+    source: str,
+    path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_buckets: int = N_TERM_BUCKETS,
+) -> None:
+    """Merge `new_docs` into the write_postings_index layout at `source`
+    and publish the result at `path` (a NEW directory: deploy by pointer
+    flip, so a crash mid-write never touches the live index). The source
+    passes the shared read gate first — merging from a crashed publish
+    would re-stamp its mixed rows under a fresh, valid-looking epoch.
+    The stored postings carry the tb partition column; the merge works
+    on the logical (term, doc_id, tf, dl) rows and re-buckets on write."""
+    spark = new_docs.sparkSession
+    _published_postings_meta(spark, source)
+    postings, doclens = update_postings(
+        spark.read.parquet(f"{source}/postings").drop("tb"),
+        spark.read.parquet(f"{source}/doclens"),
+        new_docs, text_col=text_col, id_col=id_col,
+    )
+    write_postings_index(postings, doclens, path, n_buckets=n_buckets)

@@ -1,43 +1,41 @@
-"""Shared persisted-index serving utilities (round 10, VERDICT r9 #1/#6).
+"""Shared persisted-index serving utilities: the one publish protocol
+and the one read gate of the serving indexes.
 
 Every persisted serving artifact in this engine — BM25 postings
 (operators/search.py), IVF-flat and IVF-PQ ANN (operators/similarity.py)
 — follows the same contract: the DATA is partitioned by a pruning key in
-Hive-style directories (``tb=K/``, ``list_id=K/``) and a small JSON meta
+Hive-style directories (``tb=K/``, ``list_id=K/``) and a small meta
 document records the quantizers/stats plus the build-time partition
 MANIFEST, so serving constructs the probed paths directly with zero
 per-query discovery. These helpers are the ONE implementation of that
 contract, so the scale-safe shape cannot drift between index kinds:
 
-- meta IO goes through fs.py's fs_write_json / fs_read_json and
-  listings through fs.hadoop_fs, so build and serve work on ANY
-  Spark-reachable filesystem (``file:``, ``hdfs:``, ``s3a:``, ``abfs:``,
-  ``gs:``), and a meta is published atomically (temp + rename): a
-  reader never observes a truncated one.
-- write_epoch_marker / check_index_epoch: the publish-consistency gate
-  (round 11, VERDICT r10 #1). Build/update flows write DATA first and
-  meta second, so a crash between the two used to leave new codes under
-  a stale manifest/quantizers — silently wrong serving results. Now
-  every publish stamps a fresh epoch token into the data directory
-  (written AFTER the data, BEFORE the meta) and into the meta document;
-  serve compares the two and fails LOUD on any mismatch. Every crash
-  window is covered: data overwritten but marker not yet written →
-  marker missing (Spark's overwrite cleared the directory) → loud;
-  marker written but meta publish crashed → old meta epoch != new
-  marker → loud; complete publish → epochs match. Metas written before
-  round 11 carry no epoch and skip the check (nothing to verify).
-- validate_meta: versioned-meta gate (round 11, VERDICT r10 #6). Index
-  metas carry ``format_version``; a meta newer than this engine or a
-  current-version meta missing required fields fails loud at serve
-  time instead of KeyError-ing mid-plan.
-- list_partition_keys: the build-time manifest — ONE directory listing,
-  amortizing per-query partition discovery into the build.
+- publish_partitioned: the data half of every build and update — write
+  the frame partitioned by its key, list the manifest
+  (list_partition_keys, ONE directory listing amortizing per-query
+  discovery into the build) and stamp a fresh epoch
+  (write_epoch_marker). It returns (manifest, epoch) and the caller
+  writes its meta last: postings keep their Spark-JSON ``meta/`` row,
+  the ANN kinds a JSON document through fs.py's fs_write_json (atomic
+  temp + rename on any Spark-reachable filesystem: ``file:``,
+  ``hdfs:``, ``s3a:``, ``abfs:``, ``gs:``).
+- check_published: the one gate every reader runs before touching the
+  data — bm25_serve, ivf_serve, ivfpq_serve, and the incremental
+  updates on their source index. It is validate_meta (a meta newer
+  than this engine, or a current-version meta missing required fields,
+  fails loud instead of KeyError-ing mid-plan) followed by
+  check_index_epoch (the epoch in the meta must equal the marker in
+  the data directory). Every crash window of a publish is covered:
+  data overwritten but marker not yet written → marker missing
+  (Spark's overwrite cleared the directory) → loud; marker written but
+  meta publish crashed → old meta epoch != new marker → loud; complete
+  publish → epochs match. Metas written before round 11 carry no epoch
+  and skip the check (nothing to verify).
 - pruned_partition_read: manifest-intersect + direct probed-path
-  construction + None-on-empty-intersection, shared by bm25_serve,
-  ivf_serve and ivfpq_serve (they hand-rolled three copies before).
-  Since round 11 it fails loud when the stored manifest names a probed
-  directory the layout lacks (the inverse of pruning — a crashed or
-  hand-mangled publish), instead of surfacing an opaque path error.
+  construction + None-on-empty-intersection, shared by the three serve
+  functions. It fails loud when the stored manifest names a probed
+  directory the layout lacks (a crashed or hand-mangled publish),
+  instead of surfacing an opaque path error.
 
 Reference parity note: the reference (HSLdevcom/transitlog-hfp-sink) has
 no serving tier — this family is part of the SURVEY §2.6 beyond-reference
@@ -96,7 +94,7 @@ def read_epoch_marker(spark: SparkSession, data_dir: str) -> str | None:
 def check_index_epoch(
     spark: SparkSession, expected: str | None, data_dir: str, what: str
 ) -> None:
-    """Serve-time publish-consistency gate (round 11, VERDICT r10 #1):
+    """Read-time publish-consistency gate (round 11, VERDICT r10 #1):
     fail LOUD when the meta's recorded epoch does not match the marker
     in the data directory — the signature of a build/update that
     crashed between the data write and the meta publish, which would
@@ -149,6 +147,23 @@ def validate_meta(meta: dict, kind: str, required: tuple[str, ...]) -> None:
             )
 
 
+def check_published(
+    spark: SparkSession,
+    meta: dict,
+    kind: str,
+    required: tuple[str, ...],
+    data_dir: str,
+) -> None:
+    """The one gate every reader of a published index runs before it
+    touches the data: validate_meta, then check_index_epoch against the
+    marker in `data_dir`. The serve functions run it, and so does an
+    incremental update on its SOURCE index — merging from a crashed
+    publish would otherwise re-stamp codes from two quantizer sets
+    under one valid-looking epoch."""
+    validate_meta(meta, kind, required)
+    check_index_epoch(spark, meta.get("epoch"), data_dir, kind)
+
+
 def list_partition_keys(
     spark: SparkSession, root: str, part_col: str
 ) -> list[int]:
@@ -166,13 +181,32 @@ def list_partition_keys(
     )
 
 
+def publish_partitioned(
+    df: DataFrame, root: str, part_col: str
+) -> tuple[list[int], str]:
+    """Write `df` over `root` partitioned by `part_col`, list the
+    manifest and stamp a fresh epoch: the data half of every index
+    publish. Returns (manifest keys, epoch); the caller writes its meta
+    next, embedding both — the meta write is the commit point, and a
+    crash anywhere before it leaves a marker the old meta does not
+    name (check_index_epoch then fails loud)."""
+    (
+        df.repartition(part_col)
+        .write.mode("overwrite")
+        .partitionBy(part_col)
+        .parquet(root)
+    )
+    spark = df.sparkSession
+    keys = list_partition_keys(spark, root, part_col)
+    return keys, write_epoch_marker(spark, root)
+
+
 def pruned_partition_read(
     spark: SparkSession,
     root: str,
     part_col: str,
     keys: list[int],
     manifest: list[int] | None = None,
-    discovery: str = "auto",
 ) -> DataFrame | None:
     """The shared manifest-serve read: intersect the probed `keys` with
     the build-time `manifest`, construct the matched ``part_col=K/``
@@ -196,35 +230,9 @@ def pruned_partition_read(
     manifest=None fallback, where the keys were just listed from the
     layout itself.
 
-    discovery (round 11, VERDICT r10 #3) — the cost stance for the
-    manifest-vs-root question, MEASURED and resolved:
-    - 'manifest': probed-path-direct reads (the round-9/10 behavior);
-    - 'root': one spark.read.parquet(root) + the IN prune — pays full
-      partition discovery in one bulk listing; kept as an explicit
-      mode so the comparison stays reproducible (the ivfpqserve11
-      probe runs through this exact parameter);
-    - 'auto' (default): resolves to 'manifest' at every size — the
-      hypothesized small-local-layout crossover measured EMPTY once
-      both modes ran through ONE code path. The round-10 ivfpqserve10
-      root-win at 256 local lists (2.79 vs 3.49 s) compared
-      ivfpq_topk's plan against the serve path, i.e. two code paths;
-      the round-11 ivfpqserve11 rerun through ivfpq_serve(discovery=)
-      has manifest ahead or tied at EVERY point — 256: 3.29 vs 4.21,
-      1024: 3.76 vs 5.78, 2560: 3.91 vs 9.82, and within noise at
-      16/64/128 lists where total~=probed (SCALING.md round 11). The
-      root path's discovery cost tracks total list count with no
-      compensating win at any size, and on object stores its listing
-      constant only grows — so 'auto' is the degenerate cost rule,
-      the same honest shape as the jaccard verify='auto' finding.
-    The publish-epoch consistency gate is independent of discovery
-    mode (the meta/marker comparison happens in the serve functions);
-    the manifest-names-missing-directory check below only guards the
-    manifest path — on the root path a stale manifest entry matches no
-    rows instead (nothing is path-constructed there)."""
-    if discovery not in ("auto", "manifest", "root"):
-        raise ValueError(
-            f"discovery={discovery!r}: expected 'auto', 'manifest' or 'root'"
-        )
+    Probed paths are the only read: a root read plus the IN prune pays
+    discovery of every directory and measured slower or tied at every
+    list count (SCALING.md, IVF-PQ discovery-mode probe, round 11)."""
     from_listing = manifest is None
     if manifest is None:
         manifest = list_partition_keys(spark, root, part_col)
@@ -232,8 +240,6 @@ def pruned_partition_read(
     hit = [k for k in keys if k in allowed]
     if not hit:
         return None
-    if discovery == "root":
-        return spark.read.parquet(root).where(F.col(part_col).isin(hit))
     if not from_listing:
         gone = [
             k for k in hit if not path_exists(spark, f"{root}/{part_col}={k}")

@@ -587,7 +587,6 @@ def _ann_serve_prepare(
     query_id_col: str,
     nprobe: int,
     max_query_rows: int,
-    discovery: str = "auto",
 ):
     """The ANN serving skeleton ivf_serve and ivfpq_serve share (round
     10, VERDICT r9 #6 follow-through): bounded query-side collect, NULL
@@ -620,9 +619,7 @@ def _ann_serve_prepare(
         queries.select(F.col(query_id_col).alias("query_id")).dtypes
     )["query_id"]
     index = (
-        pruned_partition_read(
-            spark, data_dir, "list_id", probed, manifest, discovery=discovery
-        )
+        pruned_partition_read(spark, data_dir, "list_id", probed, manifest)
         if qrows
         else None
     )
@@ -645,9 +642,8 @@ def ivf_serve(
     vec_col: str | None = None,
     query_id_col: str = "query_id",
     max_query_rows: int = 100_000,
-    discovery: str = "auto",
 ) -> DataFrame:
-    """Serve top-k from an ``app build-index --kind ivf`` LAYOUT with
+    """Serve top-k from a write_ivf_index LAYOUT with
     directory-direct probed-list reads (round 9 — the IVF twin of
     bm25_serve's manifest treatment): load the stored centroids, compute
     the probed-list union on the driver (`_nearest_lists_py`, the
@@ -674,30 +670,15 @@ def ivf_serve(
     explicitly is honored, for query frames whose vector column is
     named differently from the corpus'. Meta IO goes through the
     Hadoop FS API (fs.py), so a layout on s3a/abfs/gs
-    serves exactly like a local one (VERDICT r9 #1)."""
-    from transitlog_hfp_sink_spark.fs import fs_read_json
-    from transitlog_hfp_sink_spark.operators.serving import (
-        check_index_epoch,
-        validate_meta,
-    )
-
-    meta = fs_read_json(spark, f"{path}/centroids.json")
-    # round 11 (VERDICT r10 #1/#6): version/field gate + the publish
-    # epoch comparison — a crashed build/update fails loud here instead
-    # of serving new assignments under stale centroids
-    validate_meta(
-        meta, "ivf",
-        ("n_lists", "vec_col", "centroids", "lists", "id_col", "id_type",
-         "epoch"),
-    )
-    check_index_epoch(
-        spark, meta.get("epoch"), f"{path}/ivf_assign", "ivf_serve"
-    )
+    serves exactly like a local one (VERDICT r9 #1), and the meta
+    passes the shared read gate (serving.check_published) first: a
+    crashed build/update fails loud instead of serving new assignments
+    under stale centroids."""
+    meta, data = _published_ann_meta(spark, "ivf", path)
     cents = meta["centroids"]
     vcol = vec_col or meta.get("vec_col", "embedding")
     index, rebuilt, qid_type = _ann_serve_prepare(
-        spark, meta, f"{path}/ivf_assign", queries, vcol, query_id_col,
-        nprobe, max_query_rows, discovery=discovery,
+        spark, meta, data, queries, vcol, query_id_col, nprobe, max_query_rows
     )
     if index is None:
         return spark.createDataFrame(
@@ -1077,12 +1058,15 @@ def semantic_dedup(
       SemDeDup implementations do — no iterative matching).
 
     Scale shape: assignment is MAP-ONLY (broadcast codebook literal, no
-    UDF); the self-join shuffles both sides once on cluster_id. At 100 TB
-    the codebook has 10^4-10^5 entries so per-cluster populations stay
-    bounded (SemDeDup's own regime — size it with adaptive_n_clusters);
-    AQE's skew-join handles outlier clusters.
+    UDF); the assigned rows shuffle once on cluster_id and each cluster's
+    pairs are scored in ONE applyInPandas group, so one worker holds a
+    whole cluster and all of its pairs. At 100 TB the codebook has
+    10^4-10^5 entries so per-cluster populations stay bounded
+    (SemDeDup's own regime — size it with adaptive_n_clusters); there is
+    no skew-join split inside a group, so max_cluster_rows is the bound
+    for skewed corpora.
 
-    max_cluster_rows adds a second, HARD bound for skewed corpora: a
+    max_cluster_rows is that HARD bound: a
     cluster larger than the cap is deterministically sub-split on
     pmod(xxhash64(id), ceil(size/cap)) and pairs are generated only
     within each sub-split — a documented approximation (cross-split
@@ -1103,12 +1087,12 @@ def semantic_dedup(
         else codebook_assign_arrow
     )
     # localCheckpoint (round 11, guide §1.2: remove duplicated passes):
-    # the assignment output feeds FOUR consumers — the cluster-size agg,
-    # both pair-join sides, and keep's anti-join left side — and only the
-    # two pair-join sides shuffle on the same key, so exchange reuse
-    # cannot fold the others: before this, the n*k distance kernel
-    # re-ran up to 4x per action (plans/r11/embedding_semdedup_before.txt
-    # shows the scan+assign subtree at operators (1), (16), (34), (41)).
+    # the assignment output feeds several consumers — the cluster-size
+    # agg, the pair scoring, and keep's anti-join left side — and
+    # exchange reuse cannot fold them: before this, with the pairs still
+    # a self-join, the n*k distance kernel re-ran up to 4x per action
+    # (plans/r11/embedding_semdedup_before.txt shows the scan+assign
+    # subtree at operators (1), (16), (34), (41)).
     # One lazy checkpoint materializes it once; every consumer reads the
     # blocks. Same lifecycle/failure stance as minhash_lsh_pairs' shingle
     # checkpoint (lazy, ContextCleaner-freed, job-level retry on executor
@@ -1127,8 +1111,9 @@ def semantic_dedup(
         #   extra full shuffle and ran 1.8x slower at sf0.1).
         # - large k (BLAS kernel): a COUNT WINDOW on cluster_id. There
         #   the n*k assignment stage is the expensive part and the join
-        #   shape re-executes it a third time (sizes agg + both
-        #   self-join sides); one more exchange is the cheaper price.
+        #   shape re-executed it once per consumer (measured in round 6,
+        #   when the pairs were still a self-join); one more exchange
+        #   is the cheaper price.
         if len(centroids) <= ASSIGN_ARROW_THRESHOLD:
             sizes = base.groupBy("cluster_id").agg(F.count("*").alias("__cn"))
             n_sub = F.ceil(F.col("__cn") / F.lit(max_cluster_rows)).cast("long")
@@ -1687,63 +1672,187 @@ def write_ivfpq_index(
     codebooks: list[list[list[float]]] | None = None,
     round_digits: int | None = None,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Persist the composed IVF-PQ SERVING layout (round 9 — completes
-    the persisted-index family alongside write_postings_index and the
-    app's IVF layout): train coarse centroids + residual codebooks
-    (unless given — incremental rebuilds REUSE the stored quantizers,
-    since retraining would orphan every historical code), encode the
-    corpus map-only, write the (id, list_id, codes) table partitioned
-    by list_id, and record meta (quantizers + the LIST MANIFEST from
-    one build-time filesystem listing + the id column/type) so
-    ivfpq_serve opens only probed directories with zero per-query
-    discovery. Returns (centroids, codebooks).
+    """Persist the composed IVF-PQ SERVING layout (the persisted-index
+    family with write_postings_index and write_ivf_index): train coarse
+    centroids + residual codebooks (unless given), encode the corpus
+    map-only and publish the (id, list_id, codes) table partitioned by
+    list_id with its meta (quantizers + the LIST MANIFEST + the id
+    column/type), so ivfpq_serve opens only probed directories with
+    zero per-query discovery. Returns (centroids, codebooks).
 
-    Meta IO goes through the Hadoop FS API (fs.py) so the layout can be built directly on object storage.
     round_digits passes through to ivfpq_encode (round-before-argmin
     for cross-engine-stable codes — the oracle-twinned registry leg;
     None = full precision for production)."""
-    from transitlog_hfp_sink_spark.fs import fs_write_json
-    from transitlog_hfp_sink_spark.operators.serving import (
-        SERVING_META_VERSION,
-        list_partition_keys,
-        write_epoch_marker,
-    )
-
     if (centroids is None) != (codebooks is None):
         raise ValueError("centroids and codebooks must be given together")
     if centroids is None:
         centroids, codebooks = ivfpq_train(
             corpus, n_lists=n_lists, m=m, k=k, vec_col=vec_col, seed=seed
         )
-    index = ivfpq_encode(
-        corpus, centroids, codebooks, id_col, vec_col, round_digits
-    )
-    (
-        index.repartition("list_id")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(f"{path}/ivfpq_codes")
-    )
-    spark = corpus.sparkSession
-    lists = list_partition_keys(spark, f"{path}/ivfpq_codes", "list_id")
-    # publish-consistency epoch (round 11, VERDICT r10 #1): data first,
-    # then the marker, then the meta (atomically, temp+rename inside
-    # fs_write_json) — ivfpq_serve compares marker vs meta and fails
-    # loud on a publish that crashed between the two
-    epoch = write_epoch_marker(spark, f"{path}/ivfpq_codes")
-    fs_write_json(
-        spark,
-        f"{path}/ivfpq_meta.json",
-        {
-            "format_version": SERVING_META_VERSION,
-            "n_lists": len(centroids), "m": m, "k": k,
-            "vec_col": vec_col, "id_col": id_col,
-            "id_type": dict(index.dtypes)[id_col],
-            "centroids": centroids, "codebooks": codebooks,
-            "lists": lists, "epoch": epoch,
-        },
+    _publish_ann_index(
+        "ivfpq",
+        ivfpq_encode(corpus, centroids, codebooks, id_col, vec_col, round_digits),
+        path,
+        {"centroids": centroids, "codebooks": codebooks, "m": m, "k": k,
+         "vec_col": vec_col, "id_col": id_col},
     )
     return centroids, codebooks
+
+
+def write_ivf_index(
+    corpus: DataFrame,
+    path: str,
+    n_lists: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroids: list[list[float]] | None = None,
+) -> list[list[float]]:
+    """Persist the IVF-flat SERVING layout: train the coarse centroids
+    (unless given), assign every corpus vector to its nearest list
+    map-only, and publish the (id, vector, list_id) table partitioned by
+    list_id with its meta (centroids + LIST MANIFEST + id column/type),
+    so ivf_serve opens only probed directories. Returns the centroids."""
+    if centroids is None:
+        centroids = ivf_centroids(corpus, n_lists=n_lists, vec_col=vec_col)
+    _publish_ann_index(
+        "ivf",
+        ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col),
+        path,
+        {"centroids": centroids, "vec_col": vec_col, "id_col": id_col},
+    )
+    return centroids
+
+
+#: per ANN kind: (data directory, meta document, fields a current-version
+#: meta must carry).
+ANN_LAYOUTS = {
+    "ivf": (
+        "ivf_assign", "centroids.json",
+        ("n_lists", "vec_col", "centroids", "lists", "id_col", "id_type",
+         "epoch"),
+    ),
+    "ivfpq": (
+        "ivfpq_codes", "ivfpq_meta.json",
+        ("n_lists", "m", "k", "vec_col", "centroids", "codebooks", "lists",
+         "id_col", "id_type", "epoch"),
+    ),
+}
+
+
+def _publish_ann_index(kind: str, index: DataFrame, path: str, meta: dict) -> dict:
+    """Publish an encoded ANN index through the shared protocol
+    (serving.publish_partitioned: data, manifest, epoch) and write its
+    meta last, atomically (temp + rename in fs_write_json). Both
+    writers and the incremental update record the same fields. Returns
+    the written meta."""
+    from transitlog_hfp_sink_spark.fs import fs_write_json
+    from transitlog_hfp_sink_spark.operators.serving import (
+        SERVING_META_VERSION,
+        publish_partitioned,
+    )
+
+    data_dir, meta_file, _ = ANN_LAYOUTS[kind]
+    lists, epoch = publish_partitioned(index, f"{path}/{data_dir}", "list_id")
+    doc = {
+        **meta,
+        "format_version": SERVING_META_VERSION,
+        "n_lists": len(meta["centroids"]),
+        "id_type": dict(index.dtypes)[meta["id_col"]],
+        "lists": lists,
+        "epoch": epoch,
+    }
+    fs_write_json(index.sparkSession, f"{path}/{meta_file}", doc)
+    return doc
+
+
+def _published_ann_meta(spark, kind: str, path: str) -> tuple[dict, str]:
+    """(meta document, data directory) of an ANN layout, past the shared
+    read gate (serving.check_published) that serving and updates both
+    run."""
+    from transitlog_hfp_sink_spark.fs import fs_read_json
+    from transitlog_hfp_sink_spark.operators.serving import check_published
+
+    data_dir, meta_file, required = ANN_LAYOUTS[kind]
+    meta = fs_read_json(spark, f"{path}/{meta_file}")
+    data = f"{path}/{data_dir}"
+    check_published(spark, meta, kind, required, data)
+    return meta, data
+
+
+def _meta_id_col(meta: dict, flag_value: str | None, default: str) -> str:
+    """The id column an incremental index update should use (ADVICE r9):
+    the meta-recorded one wins; an explicit id column that CONFLICTS
+    with it fails loud here (the alternative was an opaque
+    AnalysisException deep in the upsert anti-join). Pre-round-9 metas
+    lack the field and fall back to the flag/default."""
+    recorded = meta.get("id_col")
+    if flag_value and recorded and flag_value != recorded:
+        raise ValueError(
+            f"index was built with id_col={recorded!r}, got --id-col "
+            f"{flag_value!r}: an incremental update must key on the "
+            "stored index's id column"
+        )
+    return flag_value or recorded or default
+
+
+def update_ann_index(
+    kind: str,
+    corpus: DataFrame,
+    source: str,
+    path: str,
+    id_col: str | None = None,
+    vec_col: str = "embedding",
+) -> dict:
+    """Merge `corpus` into the ``kind`` ("ivf" / "ivfpq") layout at
+    `source` and publish the result at `path` (a NEW directory: deploy
+    by pointer flip). Returns the written meta.
+
+    The stored quantizers are REUSED — retraining from the batch alone
+    would shift every list boundary and orphan the historical codes —
+    so only the batch is encoded, map-side. A re-sent id's NEW row wins
+    (last write wins, the update_postings contract): the batch ids are
+    broadcast and anti-joined out of the stored rows, so the (large)
+    historical index is never shuffled.
+
+    Before any data is read the source passes the shared read gate
+    (serving.check_published), and the batch is checked against the
+    stored vector column and the recorded id column (_meta_id_col).
+    A batch whose vectors do not match the trained dimension fails
+    loud: it would NULL every distance and dump all its vectors into
+    list 0."""
+    spark = corpus.sparkSession
+    meta, data = _published_ann_meta(spark, kind, source)
+    if meta["vec_col"] != vec_col:
+        raise ValueError(
+            f"index was built on vec_col={meta['vec_col']!r}, "
+            f"got --vec-col {vec_col!r}"
+        )
+    id_col = _meta_id_col(meta, id_col, "vec_id")
+    cents = meta["centroids"]
+    dim = len(cents[0])
+    bad = corpus.where(
+        F.col(vec_col).isNull() | (F.size(vec_col) != dim)
+    ).select(F.col(id_col), F.size(vec_col).alias("dim")).head(1)
+    if bad:
+        raise ValueError(
+            f"vector dim mismatch vs the index's trained centroids: row "
+            f"(id={bad[0][id_col]!r}, dim={bad[0]['dim']}) != index dim {dim}"
+        )
+    if kind == "ivf":
+        fresh = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
+        quantizers = {"centroids": cents}
+    else:
+        books = meta["codebooks"]
+        fresh = ivfpq_encode(corpus, cents, books, id_col, vec_col)
+        quantizers = {"centroids": cents, "codebooks": books,
+                      "m": meta["m"], "k": meta["k"]}
+    old = spark.read.parquet(data)
+    merged = old.join(
+        F.broadcast(fresh.select(id_col).distinct()), on=id_col, how="left_anti"
+    ).unionByName(fresh.select(*old.columns))
+    return _publish_ann_index(
+        kind, merged, path, {**quantizers, "vec_col": vec_col, "id_col": id_col}
+    )
 
 
 def ivfpq_serve(
@@ -1755,7 +1864,6 @@ def ivfpq_serve(
     query_id_col: str = "query_id",
     vec_col: str | None = None,
     max_query_rows: int = 100_000,
-    discovery: str = "auto",
 ) -> DataFrame:
     """Serve ADC top-k from a write_ivfpq_index layout with
     directory-direct probed-list reads (the ivf_serve/bm25_serve
@@ -1767,30 +1875,14 @@ def ivfpq_serve(
     at the same nprobe. NULL query embeddings are dropped; an empty
     probed-bucket intersection serves an empty typed frame without
     touching storage. Meta IO goes through the Hadoop FS API
-    (fs.py) so an object-store layout serves
-    exactly like a local one."""
-    from transitlog_hfp_sink_spark.fs import fs_read_json
-    from transitlog_hfp_sink_spark.operators.serving import (
-        check_index_epoch,
-        validate_meta,
-    )
-
-    meta = fs_read_json(spark, f"{path}/ivfpq_meta.json")
-    # round 11 (VERDICT r10 #1/#6): same gates as ivf_serve/bm25_serve —
-    # versioned meta + publish-epoch consistency, loud on mismatch
-    validate_meta(
-        meta, "ivfpq",
-        ("n_lists", "m", "k", "vec_col", "centroids", "codebooks", "lists",
-         "id_col", "id_type", "epoch"),
-    )
-    check_index_epoch(
-        spark, meta.get("epoch"), f"{path}/ivfpq_codes", "ivfpq_serve"
-    )
+    (fs.py) so an object-store layout serves exactly like a local one,
+    and the meta passes the shared read gate (serving.check_published)
+    first."""
+    meta, data = _published_ann_meta(spark, "ivfpq", path)
     cents, books = meta["centroids"], meta["codebooks"]
     vcol = vec_col or meta["vec_col"]
     index, rebuilt, qid_type = _ann_serve_prepare(
-        spark, meta, f"{path}/ivfpq_codes", queries, vcol, query_id_col,
-        nprobe, max_query_rows, discovery=discovery,
+        spark, meta, data, queries, vcol, query_id_col, nprobe, max_query_rows
     )
     if index is None:
         return spark.createDataFrame(

@@ -31,16 +31,24 @@ def master_conf(master: str) -> dict[str, str]:
     return {}
 
 
+def default_cpus() -> str:
+    """The local core count every entry point defaults to:
+    SPARK_GRAFT_CPUS if set, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def build_session(
     app_name: str = "transitlog-hfp-sink-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+        )
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
